@@ -30,19 +30,23 @@ pattern an Iceberg table would give with ACID appends).
 from __future__ import annotations
 
 import json
-import os
 import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .io import local_table, path_exists
 from .schema import CHECKPOINT_LEDGER
 
 LEDGER_SCHEMA = CHECKPOINT_LEDGER
 
 
+def _bucket_sql(conv_col: str, n_buckets: int) -> str:
+    return f"CAST(pmod(xxhash64(`{conv_col}`), {int(n_buckets)}) AS INT)"
+
+
 def bucket_of(conv_col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(F.col(conv_col)), F.lit(n_buckets)).cast("int")
+    return F.expr(_bucket_sql(conv_col, n_buckets))
 
 
 def lineage_id(input_fingerprint: str, code_version: str, params: dict) -> str:
@@ -60,15 +64,20 @@ class CheckpointLedger:
         self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame:
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], schema=LEDGER_SCHEMA)
+    def _read(self) -> DataFrame | None:
+        """The ledger rows, or ``None`` while no ledger exists — asked of the
+        path's Hadoop FileSystem (any URI scheme), so a fresh ledger costs
+        no Spark job."""
+        if not path_exists(self.spark, self.path):
+            return None
         return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
 
     def done_buckets(self, run_id: str, lineage: str) -> set[int]:
+        led = self._read()
+        if led is None:
+            return set()
         rows = (
-            self._read()
-            .where((F.col("run_id") == run_id) & (F.col("input_lineage") == lineage))
+            led.where((F.col("run_id") == run_id) & (F.col("input_lineage") == lineage))
             .where(F.col("status") == "done")
             .select("partition_key")
             .collect()
@@ -80,9 +89,11 @@ class CheckpointLedger:
         bucket (or ``None`` if no such row) — how a resumed run reads
         back metrics that were only observable while the skipped stage
         actually executed (e.g. Observation cap accounting)."""
+        led = self._read()
+        if led is None:
+            return None
         rows = (
-            self._read()
-            .where(
+            led.where(
                 (F.col("run_id") == run_id)
                 & (F.col("input_lineage") == lineage)
                 & (F.col("partition_key") == str(bucket))
@@ -114,12 +125,13 @@ class CheckpointLedger:
         entries: list[tuple],
         lineage: str,
     ) -> None:
-        """Append ledger rows for many buckets in ONE write (the per-bucket
-        append was n_buckets tiny commits). ``entries``: (bucket, status,
-        rows_in, rows_out, metrics) tuples."""
+        """Append ledger rows for many buckets in ONE write of one file (the
+        per-bucket append was n_buckets tiny commits), built as an Arrow
+        local table so the append starts no Python worker. ``entries``:
+        (bucket, status, rows_in, rows_out, metrics) tuples."""
         import datetime as dt
 
-        now = dt.datetime.utcnow()
+        now = dt.datetime.now(dt.timezone.utc)
         rows = [
             (
                 run_id,
@@ -133,7 +145,7 @@ class CheckpointLedger:
             )
             for bucket, status, rows_in, rows_out, metrics in entries
         ]
-        self.spark.createDataFrame(rows, schema=LEDGER_SCHEMA).write.mode("append").parquet(
+        local_table(self.spark, rows, LEDGER_SCHEMA).coalesce(1).write.mode("append").parquet(
             self.path
         )
 
@@ -157,15 +169,19 @@ def run_with_checkpoints(
     pruning when the input is bucket-partitioned at rest), one dynamic-
     partition-overwrite write (idempotent on retry), one batched ledger
     append. Per-bucket row counts ride on the WRITE itself via
-    ``df.observe`` (one conditional-count accumulator per pending bucket —
-    zero post-write reads; the earlier shape re-read the written output
-    once, and before that once per bucket). Accumulator width is bounded
-    at 256 pending buckets: every written row evaluates one CASE WHEN per
-    accumulator, and a wider aggregate exceeds the HotSpot huge-method /
-    codegen limits (running interpreted — costlier per row than the
-    read-back it replaces). Beyond the bound the counts fall back to one
-    columnar read-back of the written partitions (a single scan of
-    counts-only metadata, no recompute).
+    ``df.observe`` (one ``count_if(_bucket = b)`` accumulator per pending
+    bucket — zero post-write reads; the earlier shape re-read the written
+    output once, and before that once per bucket). Accumulator width is
+    bounded at 256 pending buckets: every written row evaluates one
+    ``count_if`` predicate per accumulator, and a wider aggregate exceeds
+    the HotSpot huge-method / codegen limits (running interpreted —
+    costlier per row than the read-back it replaces). Beyond the bound the
+    counts fall back to one columnar read-back of the written partitions
+    (a single scan of counts-only metadata, no recompute).
+
+    Job shape on a fresh ledger: the ledger's absence is answered through
+    the Hadoop FileSystem (no Spark job), the compute + write is ONE job,
+    and the ledger append is one more — neither starts a Python worker.
 
     Contract: ``transform`` must be entity-local (rows of different
     ``conv_col`` values never interact — true of every per-conversation
@@ -185,21 +201,13 @@ def run_with_checkpoints(
 
         t0 = time.perf_counter()
         part = inputs.where(
-            bucket_of(conv_col, n_buckets).isin([int(b) for b in batch])
+            f"{_bucket_sql(conv_col, n_buckets)} IN ({', '.join(str(int(b)) for b in batch)})"
         )
         out = transform(part).withColumn("_bucket", bucket_of(conv_col, n_buckets))
         obs = None
         if len(batch) <= 256:
             obs = Observation(f"ckpt_{run_id}")
-            out = out.observe(
-                obs,
-                *[
-                    F.sum(
-                        F.when(F.col("_bucket") == int(b), 1).otherwise(0)
-                    ).alias(f"b{b}")
-                    for b in batch
-                ],
-            )
+            out = out.observe(obs, *[F.expr(f"count_if(_bucket = {int(b)}) AS b{b}") for b in batch])
         out.write.mode("overwrite").partitionBy("_bucket").option(
             "partitionOverwriteMode", "dynamic"
         ).parquet(output_path)

@@ -18,6 +18,11 @@ def epoch_seconds(col: str | Column) -> Column:
     return F.unix_micros(c.cast("timestamp")) / F.lit(1e6)
 
 
+def epoch_seconds_sql(col: str) -> str:
+    """``epoch_seconds`` as SQL text over the column named ``col``."""
+    return f"unix_micros(CAST(`{col}` AS TIMESTAMP)) / 1e6"
+
+
 def epoch_micros(col: str | Column) -> Column:
     """Epoch microseconds as int64 — the exact-accumulation currency: sums
     of int64 gaps are associativity-free, so derived means are bitwise

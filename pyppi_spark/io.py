@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import heapq
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 BUCKET_COL = "_bkt"
 
@@ -75,8 +75,13 @@ def balanced_assignment(
         assign.append((cid, b))
         heapq.heappush(heap, (load + n, b))
 
-    spark = df.sparkSession
-    mapping = spark.createDataFrame(assign, f"{conv_col} string, {BUCKET_COL} int")
+    mapping = local_table(
+        df.sparkSession,
+        assign,
+        T.StructType(
+            [T.StructField(conv_col, T.StringType()), T.StructField(BUCKET_COL, T.IntegerType())]
+        ),
+    )
     if top_ids is not None:
         # long tail: stable hash of conv_id (size-agnostic, deterministic)
         rest = sizes.select(conv_col).join(mapping.select(conv_col), conv_col, "left_anti")
@@ -162,13 +167,41 @@ def register_bucketed(
     return spark.table(table)
 
 
+def local_table(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A small driver-built table (``rows``: tuples in ``schema`` field
+    order) as a DataFrame shipped to the JVM as one Arrow stream.
+    ``createDataFrame(<python list>)`` instead parallelizes pickled rows and
+    converts them in a Python-worker map, so every action on it forks
+    Python workers; this path starts none (the rows arrive as a local
+    relation, split over at most ``defaultParallelism`` partitions)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` through the Hadoop FileSystem API —
+    any URI scheme Spark itself can read and write (local, file://,
+    hdfs://, s3a://), unlike driver-local ``os.path``/``open()``."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, jpath = _hadoop_path(spark, path)
+    return bool(fs.exists(jpath))
+
+
 def write_text(spark: SparkSession, path: str, content: str) -> None:
-    """Write a small text file through the Hadoop FileSystem API — works
-    on any URI scheme Spark itself can write to (local, hdfs://, s3a://),
-    unlike driver-local ``open()``. For job metrics/ledger sidecars."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Write a small text file through the Hadoop FileSystem API. For job
+    metrics/ledger sidecars."""
+    fs, jpath = _hadoop_path(spark, path)
     out = fs.create(jpath, True)
     try:
         out.write(bytearray(content.encode("utf-8")))

@@ -6,10 +6,14 @@ crashes); here the same DP aligns two VERSIONS of a conversation (original
 vs edited transcript) — a real transcript-pipeline operation (diffing a
 redacted/retouched export against its source).
 
-Physical shape: cogrouped ``applyInPandas`` — one conversation pair per
-group, Arrow-batched in, the DP runs in numpy with each row vectorized
-(the horizontal gap recurrence ``H[i,j] = max(c_j, H[i,j-1]-gap)`` is a
-prefix-max after the ``g_j = H[i,j]+j·gap`` transform), aligned rows out.
+Physical shape (details in ``align_conversations``): each side collapses
+to one row per conversation of packed, (ts, idx)-sorted turn arrays
+(``sort_array(collect_list(struct))``), the two sides full-outer join on
+the conversation key, and ONE ``mapInPandas`` kernel aligns every
+conversation pair of each Arrow batch. The DP runs in numpy with each row
+vectorized (the horizontal gap recurrence ``H[i,j] = max(c_j, H[i,j-1]-gap)``
+is a prefix-max after the ``g_j = H[i,j]+j·gap`` transform), aligned rows
+out.
 This is the designated slow-path escape hatch (SURVEY §2.9 UDF-1): a DP
 with sequential data dependence cannot be expressed in relational
 operators.

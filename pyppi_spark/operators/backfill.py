@@ -12,9 +12,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .sessionize import _keys
+from .sessionize import CUMULATIVE, over_sql
 
 
 def ffill(
@@ -25,15 +25,8 @@ def ffill(
     idx_col: str = "turn_idx",
     suffix: str = "_ffill",
 ) -> DataFrame:
-    w = (
-        Window.partitionBy(*_keys(conv_col))
-        .orderBy(ts_col, idx_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = df
-    for c in cols:
-        out = out.withColumn(f"{c}{suffix}", F.last(c, ignorenulls=True).over(w))
-    return out
+    cum = over_sql(conv_col, ts_col, idx_col, CUMULATIVE)
+    return df.withColumns({f"{c}{suffix}": F.expr(f"last(`{c}`, true) {cum}") for c in cols})
 
 
 def bfill(
@@ -44,12 +37,5 @@ def bfill(
     idx_col: str = "turn_idx",
     suffix: str = "_bfill",
 ) -> DataFrame:
-    w = (
-        Window.partitionBy(*_keys(conv_col))
-        .orderBy(ts_col, idx_col)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    out = df
-    for c in cols:
-        out = out.withColumn(f"{c}{suffix}", F.first(c, ignorenulls=True).over(w))
-    return out
+    rest = over_sql(conv_col, ts_col, idx_col, " ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING")
+    return df.withColumns({f"{c}{suffix}": F.expr(f"first(`{c}`, true) {rest}") for c in cols})

@@ -629,9 +629,12 @@ def ngram_jaccard_pairs(
        arrays. The earlier row-form (explode grams, join candidate pairs
        to a-grams then b-grams on the gram key, count) shuffled one row
        per (pair, shared gram) — measured ~35 M rows / 8.4 s for 680k
-       candidates at sf1.0 vs ~1 s for this array form, which moves one
-       ~n_grams·8-byte array per candidate doc and evaluates a codegen
-       ``array_intersect`` per pair. Zero-overlap pairs are filtered
+       candidates at sf1.0 vs ~1 s for this array form, which evaluates a
+       codegen ``array_intersect`` per pair. Cost model: the two doc-id
+       joins attach a ~n_grams·8-byte array to every candidate PAIR, so
+       when the joins shuffle, the bytes moved scale with each document's
+       pair degree (a hub document in k pairs ships its array k times), not
+       with the candidate-doc count. Zero-overlap pairs are filtered
        explicitly (the old inner gram join never produced them), so
        output is identical for ANY threshold. Trade documented: a
        pathologically long document makes one wide array row (same

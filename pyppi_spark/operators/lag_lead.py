@@ -13,10 +13,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions.time import epoch_seconds
-from .sessionize import _keys
+from ..functions.time import epoch_seconds_sql
+from .sessionize import over_sql
 
 
 def with_lag_lead(
@@ -29,19 +29,17 @@ def with_lag_lead(
 ) -> DataFrame:
     """Add ``prev_<col>`` / ``next_<col>`` (or ``<col>_m<k>``/``_p<k>`` for
     |offset| > 1). Negative offset = lag (past), positive = lead (future)."""
-    w = Window.partitionBy(*_keys(conv_col)).orderBy(ts_col, idx_col)
-    out = df
+    over = over_sql(conv_col, ts_col, idx_col)
+    new = {}
     for c in cols:
         for k in offsets:
-            if k == 0:
-                continue
             if k < 0:
                 name = f"prev_{c}" if k == -1 else f"{c}_m{-k}"
-                out = out.withColumn(name, F.lag(c, -k).over(w))
-            else:
+                new[name] = F.expr(f"lag(`{c}`, {-k}) {over}")
+            elif k > 0:
                 name = f"next_{c}" if k == 1 else f"{c}_p{k}"
-                out = out.withColumn(name, F.lead(c, k).over(w))
-    return out
+                new[name] = F.expr(f"lead(`{c}`, {k}) {over}")
+    return df.withColumns(new)
 
 
 def with_gaps(
@@ -55,8 +53,8 @@ def with_gaps(
     """Inter-turn latency in seconds to the previous and next turn (null at
     conversation edges) — the time-axis analog of the reference's
     nearest-neighbor distances (``/root/reference/pyPPI/kdtree.py:38-48``)."""
-    w = Window.partitionBy(*_keys(conv_col)).orderBy(ts_col, idx_col)
-    t = epoch_seconds(ts_col)
-    return df.withColumn(prev_col, t - F.lag(t).over(w)).withColumn(
-        next_col, F.lead(t).over(w) - t
+    over = over_sql(conv_col, ts_col, idx_col)
+    t = epoch_seconds_sql(ts_col)
+    return df.withColumns(
+        {prev_col: F.expr(f"{t} - lag({t}) {over}"), next_col: F.expr(f"lead({t}) {over} - {t}")}
     )

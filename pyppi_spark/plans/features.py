@@ -13,16 +13,20 @@ analog of the reference's *directed* H-bond donor→acceptor pair counting,
 ``/root/reference/pyPPI/surfaceComplementarity/VDW.py:183-199``).
 
 Plan shape: ONE shuffle on ``conv_id`` feeds every window (same partition
-key + ordering ⇒ Catalyst reuses the exchange/sort), then per-conv features
-are a single partial+final hash aggregation on top. All expressions are
-JVM-side; zero Python.
+key + ordering ⇒ Catalyst reuses the exchange/sort) — none over a
+``write_bucketed`` table, whose ``HashPartitioning(_bkt)`` already satisfies
+the ``(_bkt, conv_id)`` windows — then per-conv features are ONE
+aggregation on that same partitioning: no ``Expand`` (distinct counts are
+``size(collect_set(...))``, not ``countDistinct``, whose Expand would drop
+the partitioning and force a second shuffle) and no exchange. All
+expressions are JVM-side; zero Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..operators.sessionize import DEFAULT_GAP_S, with_session_id
+from ..operators.sessionize import DEFAULT_GAP_S, over_sql, with_session_id
 from ..operators.lag_lead import with_lag_lead, with_gaps
 from ..operators.backfill import ffill
 
@@ -100,63 +104,50 @@ def conv_features_from_turns(tf: DataFrame, percentile_mode: str = "exact") -> D
     if percentile_mode not in ("exact", "approx"):
         raise ValueError(f"unknown percentile_mode {percentile_mode!r}")
     p95 = (
-        F.expr("percentile(gap_prev_s, 0.95)")
+        "percentile(gap_prev_s, 0.95)"
         if percentile_mode == "exact"
-        else F.expr("percentile_approx(gap_prev_s, 0.95, 10000)")
+        else "percentile_approx(gap_prev_s, 0.95, 10000)"
     )
     bucketed = BUCKET_COL in tf.columns
+    keys = [BUCKET_COL, "conv_id"] if bucketed else ["conv_id"]
 
+    # Every column below is one SQL expression: 3 Py4J round trips each,
+    # where a Column-builder chain costs ~10 per operator (CLAUDE.md).
+    #
     # directed tool→tool transitions between consecutive non-null tool
     # turns (lag-ignore-nulls via last() over the preceding frame) — the
     # directed-pair counting of the reference's H-bond donor→acceptor set
     # (/root/reference/pyPPI/hbonds.py:174-181) on the tool axis
-    key = [BUCKET_COL, "conv_id"] if bucketed else ["conv_id"]
-    prev_frame = (
-        Window.partitionBy(*key)
-        .orderBy("ts", "turn_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    tf = tf.withColumn("_prev_tool_nn", F.last("tool", ignorenulls=True).over(prev_frame))
-
-    role_counts = [
-        F.sum(F.when(F.col("role") == r, 1).otherwise(0)).alias(f"n_{r}")
-        for r in ROLE_SET
+    before = over_sql(keys, frame=" ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")
+    tf = tf.withColumn("_prev_tool_nn", F.expr(f"last(tool, true) {before}"))
+    aggs = [
+        "count(1) AS n_turns",
+        "max(session_id) + 1 AS n_sessions",
+        *(f"count_if(role = '{r}') AS n_{r}" for r in ROLE_SET),
+        # directed role→role bigrams, fixed 4×4 flattening
+        *(
+            f"count_if(prev_role = '{a}' AND role = '{b}') AS t_{a}__{b}"
+            for a in ROLE_SET
+            for b in ROLE_SET
+        ),
+        "avg(gap_prev_s) AS latency_mean_s",
+        "max(gap_prev_s) AS latency_max_s",
+        f"{p95} AS latency_p95_s",
+        "min(ts) AS first_ts",
+        "max(ts) AS last_ts",
+        "max(turn_in_session) AS session_len_max",
+        # distinct counts as size(collect_set): nulls skipped exactly like
+        # countDistinct, but no Expand — the aggregate stays on the input
+        # partitioning (zero shuffle over a bucketed table)
+        "CAST(size(collect_set(tool)) AS BIGINT) AS n_distinct_tools",
+        "count_if(tool IS NOT NULL AND _prev_tool_nn IS NOT NULL) AS n_tool_transitions",
+        "CAST(size(collect_set(CASE WHEN tool IS NOT NULL AND _prev_tool_nn IS NOT NULL"
+        " THEN concat_ws('→', _prev_tool_nn, tool) END)) AS BIGINT) AS n_distinct_tool_pairs",
     ]
-    # directed role→role bigrams, fixed 4×4 flattening
-    bigrams = [
-        F.sum(
-            F.when((F.col("prev_role") == a) & (F.col("role") == b), 1).otherwise(0)
-        ).alias(f"t_{a}__{b}")
-        for a in ROLE_SET
-        for b in ROLE_SET
-    ]
-
-    group_keys = [BUCKET_COL, "conv_id"] if bucketed else ["conv_id"]
-    out = tf.groupBy(*group_keys).agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        (F.max("session_id") + 1).alias("n_sessions"),
-        *role_counts,
-        *bigrams,
-        F.avg("gap_prev_s").alias("latency_mean_s"),
-        F.max("gap_prev_s").alias("latency_max_s"),
-        p95.alias("latency_p95_s"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.max("turn_in_session").alias("session_len_max"),
-        F.countDistinct("tool").alias("n_distinct_tools"),
-        F.sum(
-            F.when(F.col("tool").isNotNull() & F.col("_prev_tool_nn").isNotNull(), 1).otherwise(0)
-        ).alias("n_tool_transitions"),
-        F.countDistinct(
-            F.when(
-                F.col("tool").isNotNull() & F.col("_prev_tool_nn").isNotNull(),
-                F.concat_ws("→", "_prev_tool_nn", "tool"),
-            )
-        ).alias("n_distinct_tool_pairs"),
-    ).withColumn(
+    out = tf.groupBy(*keys).agg(*map(F.expr, aggs)).withColumn(
         # mean session length over a conversation's sessions is exactly
         # total turns / session count — no second aggregation subtree needed
         "session_len_mean",
-        F.col("n_turns").cast("double") / F.col("n_sessions").cast("double"),
+        F.expr("CAST(n_turns AS DOUBLE) / CAST(n_sessions AS DOUBLE)"),
     )
     return out.drop(BUCKET_COL) if bucketed else out

@@ -129,3 +129,36 @@ def test_conv_features_percentile_modes(spark, tiny_df):
         assert av in g, f"{cid}: approx p95 {av} is not a group element"
         lo = np.percentile(g, 90) if len(g) > 1 else g[0]
         assert lo <= av <= g[-1], f"{cid}: approx p95 {av} outside [p90, max]"
+
+
+def test_distinct_tool_counts_edge_cases(spark):
+    """n_distinct_tools / n_distinct_tool_pairs against the oracle where
+    the distinct counts are easiest to get wrong: a conversation whose
+    tools are all null (0 — nulls are never counted), a one-turn
+    conversation, and repeated tool pairs (a→b twice counts once). Both
+    columns stay bigint."""
+    from pyppi_spark.schema import TRANSCRIPTS
+
+    t0 = pd.Timestamp("2024-01-01 00:00:00")
+    rows = []
+
+    def conv(cid, tools):
+        for i, tool in enumerate(tools):
+            role = "tool" if tool is not None or i % 2 else "user"
+            rows.append((cid, i, role, f"t{i}", tool, t0 + pd.Timedelta(seconds=10 * i)))
+
+    conv("all_null", [None, None, None, None])
+    conv("one_turn", ["search"])
+    conv("repeats", ["a", "b", None, "a", "b", "b", "a", None, "b"])
+    pdf = pd.DataFrame(rows, columns=[f.name for f in TRANSCRIPTS.fields])
+    out = conv_features(spark.createDataFrame(pdf, schema=TRANSCRIPTS))
+    types = dict(out.dtypes)
+    assert types["n_distinct_tools"] == types["n_distinct_tool_pairs"] == "bigint"
+    got, want = _aligned(out.toPandas(), oracle_conv_features(pdf), ["conv_id"])
+    for c in ["n_distinct_tools", "n_distinct_tool_pairs", "n_tool_transitions"]:
+        _assert_col(got[c].astype("int64"), want[c].astype("int64"), c)
+    by_conv = got.set_index("conv_id")
+    assert by_conv.loc["all_null", ["n_distinct_tools", "n_distinct_tool_pairs"]].tolist() == [0, 0]
+    assert by_conv.loc["one_turn", ["n_distinct_tools", "n_distinct_tool_pairs"]].tolist() == [1, 0]
+    # non-null sequence a b a b b a b: pairs {a→b, b→a, b→b}
+    assert by_conv.loc["repeats", ["n_distinct_tools", "n_distinct_tool_pairs"]].tolist() == [2, 3]

@@ -88,3 +88,38 @@ def test_dataset_split_no_exchange(spark, tiny_df):
         tiny_df, {"train": 0.8, "val": 0.2}, id_col="conv_id"
     )
     assert "Exchange" not in _plan(df), _plan(df)
+
+
+def test_bucketed_conv_features_one_aggregation_no_shuffle(spark, tiny_df, tmp_path):
+    """The per-conversation aggregate sits on the storage partitioning: the
+    distinct counts plan no Expand (countDistinct's would drop
+    HashPartitioning(_bkt) and force an exchange before the aggregate)."""
+    from pyppi_spark.plans import conv_features
+
+    loc = str(tmp_path / "bucketed_conv")
+    write_bucketed(tiny_df, "t_plans_bucketed_conv", loc, n_buckets=4)
+    bt = register_bucketed(spark, "t_plans_bucketed_conv", loc, n_buckets=4)
+    out = conv_features(bt)
+    plan = _plan(out)
+    assert "Expand" not in plan, plan
+    assert "Exchange" not in plan, plan
+    assert out.count() == conv_features(tiny_df).count()
+
+
+def test_balanced_assignment_is_greedy_bin_pack(spark, tiny_df, tiny_pdf):
+    """conv→bucket mapping equals a plain-Python largest-first greedy pack
+    (ties by conv_id) of the conversation sizes."""
+    import heapq
+
+    from pyppi_spark.io import balanced_assignment
+
+    sizes = tiny_pdf.groupby("conv_id").size()
+    heap = [(0, b) for b in range(4)]
+    want = {}
+    for cid, n in sorted(sizes.items(), key=lambda x: (-x[1], x[0])):
+        load, b = heapq.heappop(heap)
+        want[cid] = b
+        heapq.heappush(heap, (load + n, b))
+    mapping = balanced_assignment(tiny_df, 4, heavy_hitters=None)
+    assert mapping.dtypes == [("conv_id", "string"), ("_bkt", "int")]
+    assert {r.conv_id: r._bkt for r in mapping.collect()} == want
