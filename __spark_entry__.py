@@ -910,9 +910,7 @@ def q_ngram_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _documents(spark, sf_dir)
     sigs = minhash_signatures(docs)
-    # candidates feed THREE joins in the verify stage — materialize once or
-    # the whole minhash+LSH pipeline recomputes per reference
-    cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2).localCheckpoint()
+    cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2)
     dups = ngram_jaccard_pairs(docs, cands, threshold=0.8)
     return near_dedup_representatives(docs, dups).select("doc_id")
 
@@ -1573,7 +1571,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, {"train": 0.8, "val": 0.1, "test": 0.1}, id_col="doc_id", seed=42
     ).select("doc_id", "split")
     sigs = minhash_signatures(docs)
-    cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2).localCheckpoint()
+    cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2)
     pairs = ngram_jaccard_pairs(docs, cands, threshold=0.8)
     out = (
         pairs.join(
@@ -1643,7 +1641,7 @@ def q_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _documents(spark, sf_dir)
     sigs = minhash_signatures(docs)
-    cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2).localCheckpoint()
+    cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2)
     pairs = ngram_jaccard_pairs(docs, cands, threshold=0.8)
     kept = near_dedup_representatives(docs, pairs, score_col="n_chars")
     return kept.select("doc_id", "n_chars")
@@ -1691,7 +1689,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _documents(spark, sf_dir)
     sigs = minhash_signatures(docs)
-    cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2).localCheckpoint()
+    cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2)
     pairs = ngram_jaccard_pairs(docs, cands, threshold=0.8)
     comp = near_dup_components(pairs)
     sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))

@@ -268,7 +268,7 @@ def main() -> None:
 
         def near_dedup_fast() -> None:
             sigs = minhash_signatures(docs, num_hashes=64, shingle_n=3, seed=42, hash_mode="fast")
-            cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2).localCheckpoint()
+            cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2)
             dups = ngram_jaccard_pairs(docs, cands, threshold=0.8)
             force(near_dedup_representatives(docs, dups).select("doc_id"))
 

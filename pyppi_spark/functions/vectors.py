@@ -34,6 +34,15 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
+def dot_sql(a: str, b: str) -> str:
+    """``dot`` as SQL text over two array expressions — the same left fold,
+    for plans built from one SQL expression per column."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS double) * CAST(y AS double)), "
+        "0.0D, (acc, v) -> acc + v)"
+    )
+
+
 def l2_norm(a: Column, dim: int | None = None) -> Column:
     return F.sqrt(
         F.aggregate(

@@ -50,7 +50,7 @@ def _grams(df: DataFrame, text_col: str, id_col: str, n: int, distinct: bool = T
     from the report)."""
     words = df.select(
         F.col(id_col),
-        F.posexplode_outer(F.split(_normalize(F.col(text_col)), " ")).alias("_pos", "_w0"),
+        F.posexplode_outer(F.split(_normalize(text_col), " ")).alias("_pos", "_w0"),
     ).select(
         F.col(id_col),
         F.coalesce("_pos", F.lit(0)).alias("_pos"),
@@ -104,7 +104,7 @@ def repetition_report(
 
         id_type = docs.schema[id_col].dataType.simpleString()
         staged = docs.select(
-            F.col(id_col).alias("_id"), _normalize(F.col(text_col)).alias("_t")
+            F.col(id_col).alias("_id"), _normalize(text_col).alias("_t")
         )
 
         def kernel(batches):
@@ -219,7 +219,7 @@ def decontaminate(
         bc = docs.sparkSession.sparkContext.broadcast(bench_set)
         id_type = docs.schema[id_col].dataType.simpleString()
         staged = docs.select(
-            F.col(id_col).alias("_id"), _normalize(F.col(text_col)).alias("_t")
+            F.col(id_col).alias("_id"), _normalize(text_col).alias("_t")
         )
 
         def kernel(batches):

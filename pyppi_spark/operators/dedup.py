@@ -24,29 +24,46 @@ from pyspark.sql import DataFrame, Window, functions as F
 MERSENNE_P = (1 << 31) - 1
 
 
-def _normalize(col):
-    """Lowercase, collapse whitespace — the canonical text key."""
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+def _q(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return f"`{name}`"
 
 
-def _portable_hash32(col):
-    """32-bit hash reproducible in ANSI SQL engines: the integer value of
-    the first 8 hex chars of md5. Spark
+def _sql_str(s: str) -> str:
+    """A Python string as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _normalize_sql(expr: str) -> str:
+    """Lowercase, collapse whitespace — the canonical text key, as SQL text
+    over ``expr`` (the one source for every normalizing site)."""
+    return f"regexp_replace(lower(trim({expr})), '\\\\s+', ' ')"
+
+
+def _normalize(text_col: str):
+    """``_normalize_sql`` of a named column, as a Column."""
+    return F.expr(_normalize_sql(_q(text_col)))
+
+
+def _hash_sql(expr: str, hash_mode: str) -> str:
+    """The word/gram hash of ``hash_mode`` as SQL text over ``expr``.
+
+    ``fast`` is xxhash64. ``portable`` is a 32-bit hash reproducible in ANSI
+    SQL engines: the integer value of the first 8 hex chars of md5. Spark
     ``conv(substring(md5(x),1,8),16,10)`` == DuckDB
-    ``('0x'||substr(md5(x),1,8))::BIGINT`` — used by the ``portable`` hash
-    mode so signature queries get value-level oracles. ~3× slower than
-    xxhash64 (cryptographic digest); the default ``fast`` mode stays on
-    xxhash64 for production."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10).cast("long")
-
-
-def _word_hash(col, hash_mode: str):
+    ``('0x'||substr(md5(x),1,8))::BIGINT`` — so signature queries get
+    value-level oracles. ~3× slower than xxhash64 (cryptographic digest);
+    production stays on ``fast``."""
     if hash_mode == "fast":
-        return F.xxhash64(col)
+        return f"xxhash64({expr})"
     if hash_mode == "portable":
-        return _portable_hash32(col)
+        return f"cast(conv(substring(md5(cast({expr} AS string)), 1, 8), 16, 10) AS bigint)"
     raise ValueError(f"unknown hash_mode {hash_mode!r}")
+
+
+def _word_hash(expr: str, hash_mode: str):
+    """``_hash_sql(expr, hash_mode)`` as a Column (``expr`` is SQL text)."""
+    return F.expr(_hash_sql(expr, hash_mode))
 
 
 def exact_dedup(
@@ -70,13 +87,14 @@ def exact_dedup(
     collision probability to (same 64-bit hash ∧ same length) while the
     shuffle key stays fixed-width.
     """
-    order = F.col(id_col).asc() if keep == "min" else F.col(id_col).desc()
-    norm = _normalize(F.col(text_col))
-    h = df.withColumn("_k", F.xxhash64(norm)).withColumn("_kl", F.length(norm))
-    w = Window.partitionBy("_k", "_kl").orderBy(order)
+    order = "ASC" if keep == "min" else "DESC"
+    norm = _normalize_sql(_q(text_col))
     return (
-        h.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
+        df.selectExpr("*", f"xxhash64({norm}) AS _k", f"length({norm}) AS _kl")
+        .selectExpr(
+            "*", f"row_number() OVER (PARTITION BY _k, _kl ORDER BY {_q(id_col)} {order}) AS _rn"
+        )
+        .where("_rn = 1")
         .drop("_k", "_kl", "_rn")
     )
 
@@ -86,18 +104,6 @@ def _minhash_coeffs(num_hashes: int, seed: int) -> tuple[list[int], list[int]]:
     a = rng.integers(1, MERSENNE_P - 1, size=num_hashes, dtype=np.int64)
     b = rng.integers(0, MERSENNE_P - 1, size=num_hashes, dtype=np.int64)
     return a.tolist(), b.tolist()
-
-
-def shingles(text_col: str = "text", n: int = 3):
-    """Word n-gram shingle array (distinct), built with JVM array functions:
-    split → sliding windows via transform over an index sequence."""
-    words = F.split(_normalize(F.col(text_col)), " ")
-    k = F.greatest(F.size(words) - F.lit(n - 1), F.lit(0))
-    idx = F.sequence(F.lit(0), k - F.lit(1))
-    gram = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)))
-    return F.when(F.size(words) < n, F.array(F.concat_ws(" ", words))).otherwise(
-        F.array_distinct(gram)
-    )
 
 
 def minhash_signatures(
@@ -126,9 +132,10 @@ def minhash_signatures(
        zipping/exploding structs of three STRING arrays moves ~10× the
        bytes per shingle row that this long-carrying window does — the
        zip trick wins only when the alternative window carries strings.)
-    3. one ``min`` aggregate per hash function in a single hash
-       aggregation: map-side partials mean the shuffle carries 64 longs per
-       (doc × map partition), never the shingle sets. There is
+    3. one ``array(min(...), …)`` aggregate expression — a ``min`` per hash
+       function inside a single hash aggregation: map-side partials mean
+       the shuffle carries 64 longs per (doc × map partition), never the
+       shingle sets. There is
        deliberately no shingle-level de-dup: ``min`` is duplicate-
        insensitive, so the (id, shingle) ``dropDuplicates`` the first
        version ran was dead weight — Catalyst's RemoveRedundantAggregates
@@ -139,41 +146,32 @@ def minhash_signatures(
     Documents shorter than ``shingle_n`` words keep their ``pos == 0`` row
     (a partial shingle) so every document gets a signature.
 
+    Each step is one ``selectExpr``/``agg`` call over SQL text: building
+    the 64 ``min`` chains as Column objects cost 5.7–7.2k Py4J round trips
+    (~0.6–0.8 s of driver time per call); as SQL text the whole plan takes
+    under a hundred.
+
     ``hash_mode="portable"`` swaps xxhash64 for the md5-prefix hash
-    (``_portable_hash32``) at both hashing sites, making the signatures
-    bit-reproducible in DuckDB — the driver oracle runs the identical
+    (``_hash_sql``'s ``portable`` mode) at both hashing sites, making the
+    signatures bit-reproducible in DuckDB — the driver oracle runs the identical
     construction in SQL. Keep ``fast`` for production.
     """
     a, b = _minhash_coeffs(num_hashes, seed)
-    words = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(_normalize(F.col(text_col)), " ")).alias("_pos", "_wd"),
-    ).select(F.col(id_col), "_pos", _word_hash(F.col("_wd"), hash_mode).alias("_h0"))
-    w = Window.partitionBy(id_col).orderBy("_pos")
-    lead_cols = [F.lead("_h0", j).over(w).alias(f"_h{j}") for j in range(1, shingle_n)]
-    sh = (
-        words.select(F.col(id_col), "_pos", "_h0", *lead_cols)
-        .where(F.col(f"_h{shingle_n - 1}").isNotNull() | (F.col("_pos") == 0))
-        .select(
-            F.col(id_col),
-            F.pmod(
-                _word_hash(F.concat_ws("|", *[f"_h{j}" for j in range(shingle_n)]), hash_mode),
-                F.lit(MERSENNE_P),
-            ).alias("_h"),
-        )
-    )
-    mins = [
-        F.min(
-            F.pmod(
-                F.pmod(F.lit(a[i]) * F.col("_h"), F.lit(MERSENNE_P)) + F.lit(b[i]),
-                F.lit(MERSENNE_P),
-            )
-        ).alias(f"_m{i}")
-        for i in range(num_hashes)
+    ident, p = _q(id_col), MERSENNE_P
+    shingle = _hash_sql("concat_ws('|', " + ", ".join(f"_h{j}" for j in range(shingle_n)) + ")", hash_mode)
+    leads = [
+        f"lead(_h0, {j}) OVER (PARTITION BY {ident} ORDER BY _pos) AS _h{j}"
+        for j in range(1, shingle_n)
     ]
-    agg = sh.groupBy(id_col).agg(*mins)
-    return agg.select(
-        F.col(id_col), F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("minhash")
+    mins = ", ".join(f"min(pmod(pmod({a[i]} * _h, {p}) + {b[i]}, {p}))" for i in range(num_hashes))
+    return (
+        df.selectExpr(ident, f"posexplode(split({_normalize_sql(_q(text_col))}, ' ')) AS (_pos, _wd)")
+        .selectExpr(ident, "_pos", f"{_hash_sql('_wd', hash_mode)} AS _h0")
+        .selectExpr(ident, "_pos", "_h0", *leads)
+        .where(f"_h{shingle_n - 1} IS NOT NULL OR _pos = 0")
+        .selectExpr(ident, f"pmod({shingle}, {p}) AS _h")
+        .groupBy(id_col)
+        .agg(F.expr(f"array({mins}) AS minhash"))
     )
 
 
@@ -182,25 +180,13 @@ def _band_rows(signatures: DataFrame, id_col: str, bands: int, rows_per_band: in
     xxhash64 keys over a minhash signature — the banding step shared by
     the self-join and incremental LSH paths (one definition, so the key
     construction cannot drift between them)."""
-    return signatures.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at("minhash", i * rows_per_band + j + 1)
-                                for j in range(rows_per_band)
-                            ],
-                        )
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_hash"),
+    keys = ", ".join(
+        "xxhash64(concat_ws(',', "
+        + ", ".join(f"element_at(minhash, {i * rows_per_band + j + 1})" for j in range(rows_per_band))
+        + "))"
+        for i in range(bands)
     )
+    return signatures.selectExpr(_q(id_col), f"posexplode(array({keys})) AS (band_idx, band_hash)")
 
 
 def minhash_bands(
@@ -262,33 +248,27 @@ def _cap_band_buckets(
                 "would never be attached to a DataFrame)"
             )
         return banded
-    bsz = F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_hash"))
-    banded = banded.withColumn("_bsz", bsz)
+    banded = banded.selectExpr(
+        "*", "count(1) OVER (PARTITION BY band_idx, band_hash) AS _bsz"
+    )
     if hot_bucket == "error":
+        msg = (
+            f" exceeds max_bucket_size={max_bucket_size} — collapse exact duplicates "
+            "upstream (exact_dedup) or pass hot_bucket='skip'"
+        )
         banded = banded.where(
-            F.when(
-                F.col("_bsz") > max_bucket_size,
-                F.raise_error(
-                    F.concat(
-                        F.lit(f"{op_name}: band bucket size "),
-                        F.col("_bsz").cast("string"),
-                        F.lit(
-                            f" exceeds max_bucket_size={max_bucket_size} — "
-                            "collapse exact duplicates upstream "
-                            "(exact_dedup) or pass hot_bucket='skip'"
-                        ),
-                    )
-                ).isNull(),
-            ).otherwise(F.lit(True))
+            f"CASE WHEN _bsz > {max_bucket_size} THEN raise_error(concat("
+            f"{_sql_str(f'{op_name}: band bucket size ')}, cast(_bsz AS string), {_sql_str(msg)}"
+            ")) IS NULL ELSE true END"
         )
     else:
         if observation is not None:
             banded = banded.observe(
                 observation,
-                F.sum((F.col("_bsz") > max_bucket_size).cast("long")).alias("rows_dropped"),
-                F.count(F.lit(1)).alias("rows_total"),
+                F.expr(f"sum(cast(_bsz > {max_bucket_size} AS bigint)) AS rows_dropped"),
+                F.expr("count(1) AS rows_total"),
             )
-        banded = banded.where(F.col("_bsz") <= max_bucket_size)
+        banded = banded.where(f"_bsz <= {max_bucket_size}")
     return banded.drop("_bsz")
 
 
@@ -336,14 +316,9 @@ def minhash_lsh_candidates(
     banded = _cap_band_buckets(
         banded, max_bucket_size, hot_bucket, observation, "minhash_lsh_candidates"
     )
-    a = banded.select(F.col(id_col).alias("a"), "band_idx", "band_hash")
-    b = banded.select(F.col(id_col).alias("b"), "band_idx", "band_hash")
-    return (
-        a.join(b, ["band_idx", "band_hash"], "inner")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    a = banded.selectExpr(f"{_q(id_col)} AS a", "band_idx", "band_hash")
+    b = banded.selectExpr(f"{_q(id_col)} AS b", "band_idx", "band_hash")
+    return a.join(b, ["band_idx", "band_hash"]).where("a < b").select("a", "b").distinct()
 
 
 def simhash64(
@@ -360,7 +335,7 @@ def simhash64(
     """
     exploded = df.select(
         F.col(id_col),
-        F.explode(F.split(_normalize(F.col(text_col)), " ")).alias("_t"),
+        F.explode(F.split(_normalize(text_col), " ")).alias("_t"),
     ).select(F.col(id_col), F.xxhash64("_t").alias("_h"))
     sums = [
         F.sum(
@@ -405,7 +380,7 @@ def winnow_fingerprints(
     contribute their whole text as one gram so every document gets ≥1
     fingerprint.
     """
-    t = _normalize(F.col(text_col))
+    t = _normalize(text_col)
     chars = df.select(
         F.col(id_col),
         F.posexplode_outer(F.split(t, "")).alias("_pos", "_c0"),
@@ -424,7 +399,7 @@ def winnow_fingerprints(
     ).select(
         F.col(id_col),
         "_pos",
-        _word_hash(F.concat_ws("", *[f"_c{j}" for j in range(k)]), hash_mode).alias("_h"),
+        _word_hash("concat_ws('', " + ", ".join(f"_c{j}" for j in range(k)) + ")", hash_mode).alias("_h"),
     )
     w = (
         Window.partitionBy(id_col)
@@ -487,7 +462,7 @@ def winnow_fingerprints_kernel(
     if hash_mode not in ("portable", "fast"):
         raise ValueError(f"unknown hash_mode {hash_mode!r}")
     id_type = df.schema[id_col].dataType.simpleString()
-    staged = df.select(F.col(id_col).alias("_id"), _normalize(F.col(text_col)).alias("_t"))
+    staged = df.select(F.col(id_col).alias("_id"), _normalize(text_col).alias("_t"))
     # skip when the input already has that many partitions (e.g. the
     # caller pre-spread the scan) — avoids a redundant second exchange
     if repartition_to and df.rdd.getNumPartitions() < repartition_to:
@@ -554,17 +529,17 @@ def simhash_portable32(
 ) -> DataFrame:
     """SimHash with SQL-reproducible hashing, emitted as two 32-bit halves
     (``simhash_hi``, ``simhash_lo`` — each a nonneg long): bit b<32 comes
-    from bit b of ``_portable_hash32('0|'||token)``, bit b≥32 from bit b−32
-    of ``_portable_hash32('1|'||token)``. Halves avoid 64-bit assembly,
+    from bit b of the portable (md5-prefix) hash of ``'0|'||token``, bit
+    b≥32 from bit b−32 of that of ``'1|'||token``. Halves avoid 64-bit assembly,
     which differs across engines at the sign bit. Same physical shape as
     ``simhash64``: one explode + one 64-sum hash aggregation."""
     exploded = df.select(
         F.col(id_col),
-        F.explode(F.split(_normalize(F.col(text_col)), " ")).alias("_t"),
+        F.explode(F.split(_normalize(text_col), " ")).alias("_t"),
     ).select(
         F.col(id_col),
-        _portable_hash32(F.concat(F.lit("0|"), F.col("_t"))).alias("_h0"),
-        _portable_hash32(F.concat(F.lit("1|"), F.col("_t"))).alias("_h1"),
+        _word_hash("concat('0|', _t)", "portable").alias("_h0"),
+        _word_hash("concat('1|', _t)", "portable").alias("_h1"),
     )
     sums = [
         F.sum(
@@ -602,6 +577,14 @@ def ngram_jaccard_pairs(
     Physical shape (all codegen — the ``transform``-built shingle arrays
     were interpreted and measured ~1 ms/doc):
 
+    0. ``candidate_pairs`` is read three times (the semi-join prune and
+       the two array attaches), so it is ``localCheckpoint``-ed once at
+       entry: a caller may hand over the unmaterialized signature → LSH
+       plan, which would otherwise run once per reference. Measured on
+       the perfbench ``corpus_dedup`` inputs (seed 22, ``local[4]``): the
+       near-pairs step fell 5.5–10.0 → 2.7–4.2 s; its write's final plan
+       went from 14 query stages (5 reused exchanges) to 6, plus the
+       6-stage checkpoint job;
     1. shingle ROWS per candidate document (semi-join prune first): the
        token array zipped with its own left-shifted copies
        (``slice``+``concat`` — plain collection exprs, codegen) and
@@ -641,53 +624,44 @@ def ngram_jaccard_pairs(
        whole-doc locality class as the winnow kernel); the row form
        handled that by splitting rows but paid 35× the row count.
     """
+    # the pairs feed the semi-join prune and both array attaches: truncate
+    # them here, once, or each reference re-runs the whole upstream plan
+    # (signatures + LSH when the caller hands over the unmaterialized plan)
+    cands = candidate_pairs.select("a", "b").localCheckpoint()
+    ident = _q(id_col)
     # no .distinct(): the left_semi join below never multiplies left rows
     # for duplicate right keys, so the extra exchange+agg bought nothing
-    cand_ids = (
-        candidate_pairs.select(F.col("a").alias(id_col))
-        .unionByName(candidate_pairs.select(F.col("b").alias(id_col)))
-    )
-    toks = F.split(_normalize(F.col(text_col)), " ")
-    n_w = F.size(toks)
-    shifts = [toks.alias("_w0")]
-    for j in range(1, shingle_n):
-        shifts.append(
-            F.concat(
-                F.slice(toks, j + 1, F.greatest(n_w - F.lit(j), F.lit(0))),
-                F.array_repeat(F.lit(None).cast("string"), F.lit(j)),
-            ).alias(f"_w{j}")
-        )
-    sh = (
+    cand_ids = cands.selectExpr(f"a AS {ident}").unionByName(cands.selectExpr(f"b AS {ident}"))
+    toks = f"split({_normalize_sql(_q(text_col))}, ' ')"
+    # the shifted copies are named in their own projection so arrays_zip
+    # keeps the field names _w0.._w{n-1}
+    shifts = [f"{toks} AS _w0"] + [
+        f"concat(slice({toks}, {j + 1}, greatest(size({toks}) - {j}, 0)), "
+        f"array_repeat(CAST(NULL AS string), {j})) AS _w{j}"
+        for j in range(1, shingle_n)
+    ]
+    ws = ", ".join(f"_w{j}" for j in range(shingle_n))
+    gram_sets = (
         df.join(cand_ids, id_col, "left_semi")
-        .select(F.col(id_col), F.posexplode(F.arrays_zip(*shifts)).alias("_pos", "_s"))
-        .where(
-            F.col(f"_s._w{shingle_n - 1}").isNotNull() | (F.col("_pos") == 0)
-        )
-        .select(
-            F.col(id_col),
-            F.xxhash64(*[F.col(f"_s._w{j}") for j in range(shingle_n)]).alias("_g"),
-        )
-    )
-    gram_sets = sh.groupBy(id_col).agg(F.collect_set("_g").alias("_gs"))
-    attached = (
-        candidate_pairs
-        .join(gram_sets.select(F.col(id_col).alias("a"), F.col("_gs").alias("_ga")), "a")
-        .join(gram_sets.select(F.col(id_col).alias("b"), F.col("_gs").alias("_gb")), "b")
-        .select(
-            "a",
-            "b",
-            F.size(F.array_intersect("_ga", "_gb")).alias("_inter"),
-            F.size("_ga").alias("_na"),
-            F.size("_gb").alias("_nb"),
-        )
+        .selectExpr(ident, *shifts)
+        .selectExpr(ident, f"posexplode(arrays_zip({ws})) AS (_pos, _s)")
+        .where(f"_s._w{shingle_n - 1} IS NOT NULL OR _pos = 0")
+        .selectExpr(ident, "xxhash64(" + ", ".join(f"_s._w{j}" for j in range(shingle_n)) + ") AS _g")
+        .groupBy(id_col)
+        .agg(F.expr("collect_set(_g) AS _gs"))
     )
     return (
+        cands.join(gram_sets.selectExpr(f"{ident} AS a", "_gs AS _ga"), "a")
+        .join(gram_sets.selectExpr(f"{ident} AS b", "_gs AS _gb"), "b")
+        .selectExpr(
+            "a", "b", "size(array_intersect(_ga, _gb)) AS _inter",
+            "size(_ga) AS _na", "size(_gb) AS _nb",
+        )
         # the old gram-row inner join emitted nothing for zero-overlap
         # pairs; filter them so output matches for any threshold
-        attached.where(F.col("_inter") > 0)
-        .withColumn("jaccard", F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter")))
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("a", "b", "jaccard")
+        .where("_inter > 0")
+        .selectExpr("a", "b", "_inter / (_na + _nb - _inter) AS jaccard")
+        .where(f"jaccard >= {float(threshold)!r}D")
     )
 
 
@@ -867,22 +841,21 @@ def partition_components(
     id_type = dup_pairs.schema["a"].dataType.simpleString()
     kernel = _uf_mapping_kernel()
     schema = f"node {id_type}, root {id_type}"
-    cur = dup_pairs.select(F.col("a").alias("s"), F.col("b").alias("d"))
+    cur = dup_pairs.selectExpr("a AS s", "b AS d")
     maps = []
     parts = spark.sparkContext.defaultParallelism
     for _ in range(64):  # far above any real coarsening depth (log_8 E)
-        m = cur.mapInPandas(kernel, schema=schema)
         mr = (
-            m.groupBy("node")
-            .agg(F.min("root").alias("root"), F.collect_set("root").alias("_rs"))
+            cur.mapInPandas(kernel, schema=schema)
+            .groupBy("node")
+            .agg(F.expr("min(root) AS root"), F.expr("collect_set(root) AS _rs"))
             .localCheckpoint(eager=True)
         )
         maps.append(mr.select("node", "root"))
-        links = mr.where(F.size("_rs") > 1)
         contracted = (
-            links.select(
-                F.array_min("_rs").alias("s"), F.explode("_rs").alias("d")
-            ).where(F.col("s") != F.col("d"))
+            mr.where("size(_rs) > 1")
+            .selectExpr("array_min(_rs) AS s", "explode(_rs) AS d")
+            .where("s != d")
         )
         n_links = contracted.count()
         if n_links == 0:
@@ -891,13 +864,10 @@ def partition_components(
         cur = contracted.repartition(parts)
     else:
         raise RuntimeError("partition_components did not converge (bug)")
-    lab = maps[-1].select("node", F.col("root").alias("label"))
+    lab = maps[-1].selectExpr("node", "root AS label")
     for mr_prev in reversed(maps[:-1]):
-        lab = (
-            mr_prev.join(
-                lab.select(F.col("node").alias("root"), "label"), "root", "left"
-            )
-            .select("node", F.coalesce("label", "root").alias("label"))
+        lab = mr_prev.join(lab.selectExpr("node AS root", "label"), "root", "left").selectExpr(
+            "node", "coalesce(label, root) AS label"
         )
     return lab
 
@@ -1016,31 +986,21 @@ def near_dedup_representatives(
             dup_pairs, max_iters=max_iters, algorithm=algorithm,
             star_max_iters=star_max_iters,
         )
+        ident = _q(id_col)
         if score_col is None:
-            losers = comp.where(F.col("node") != F.col("label")).select(
-                F.col("node").alias(id_col)
-            )
+            losers = comp.where("node != label").selectExpr(f"node AS {ident}")
         else:
-            m = comp.join(
-                df.select(
-                    F.col(id_col).alias("node"), F.col(score_col).alias("_s")
-                ),
-                "node",
-            )
-            best = m.groupBy("label").agg(F.max("_s").alias("_best"))
+            m = comp.join(df.selectExpr(f"{ident} AS node", f"{_q(score_col)} AS _s"), "node")
+            best = m.groupBy("label").agg(F.expr("max(_s) AS _best"))
             winners = (
                 m.join(best, "label")
-                .where(F.col("_s").eqNullSafe(F.col("_best")))
+                .where("_s <=> _best")
                 .groupBy("label")
-                .agg(F.min("node").alias("_winner"))
+                .agg(F.expr("min(node) AS _winner"))
             )
-            losers = (
-                m.join(winners, "label")
-                .where(F.col("node") != F.col("_winner"))
-                .select(F.col("node").alias(id_col))
-            )
+            losers = m.join(winners, "label").where("node != _winner").selectExpr(f"node AS {ident}")
     else:
-        losers = dup_pairs.select(F.col("b").alias(id_col)).distinct()
+        losers = dup_pairs.selectExpr(f"b AS {_q(id_col)}").distinct()
     return df.join(losers, id_col, "left_anti")
 
 
@@ -1567,10 +1527,8 @@ def content_keys(df: DataFrame, text_col: str = "text") -> DataFrame:
     composite key ``exact_dedup`` groups on (hash alone risks birthday
     collisions at billions of docs). ~16 bytes/doc at rest; union each
     increment's keys back in for the next run."""
-    norm = _normalize(F.col(text_col))
-    return df.select(
-        F.xxhash64(norm).alias("_k"), F.length(norm).alias("_kl")
-    ).distinct()
+    norm = _normalize_sql(_q(text_col))
+    return df.selectExpr(f"xxhash64({norm}) AS _k", f"length({norm}) AS _kl").distinct()
 
 
 def exact_dedup_incremental(
@@ -1588,8 +1546,8 @@ def exact_dedup_incremental(
     nothing ever re-reads the old corpus text. Returns the surviving new
     documents (all columns)."""
     uniq = exact_dedup(new_docs, text_col=text_col, id_col=id_col, keep=keep)
-    norm = _normalize(F.col(text_col))
-    keyed = uniq.withColumn("_k", F.xxhash64(norm)).withColumn("_kl", F.length(norm))
+    norm = _normalize_sql(_q(text_col))
+    keyed = uniq.selectExpr("*", f"xxhash64({norm}) AS _k", f"length({norm}) AS _kl")
     return keyed.join(seen_keys, ["_k", "_kl"], "left_anti").drop("_k", "_kl")
 
 
@@ -1643,7 +1601,7 @@ def near_dedup_incremental(
         new_docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
         shingle_n=shingle_n, seed=seed, hash_mode=hash_mode,
     )
-    nb = _band_rows(new_sigs, id_col, bands, rows_per_band).withColumn("_new", F.lit(True))
+    nb = _band_rows(new_sigs, id_col, bands, rows_per_band).selectExpr("*", "true AS _new")
     if old_bands is None:
         old_sigs = minhash_signatures(
             old_docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
@@ -1651,18 +1609,14 @@ def near_dedup_incremental(
         )
         ob = _band_rows(old_sigs, id_col, bands, rows_per_band)
     else:
-        ob = old_bands.select(F.col(id_col), "band_idx", "band_hash")
-    ob = ob.withColumn("_new", F.lit(False))
-    allb = nb.unionByName(ob)
+        ob = old_bands.select(id_col, "band_idx", "band_hash")
+    allb = nb.unionByName(ob.selectExpr("*", "false AS _new"))
     allb = _cap_band_buckets(
         allb, max_bucket_size, hot_bucket, observation, "near_dedup_incremental"
     )
-    left = allb.where("_new").select(
-        F.col(id_col).alias("a"), "band_idx", "band_hash"
-    )
-    right = allb.select(
-        F.col(id_col).alias("b"), F.col("_new").alias("_new_b"), "band_idx", "band_hash"
-    )
+    ident = _q(id_col)
+    left = allb.where("_new").selectExpr(f"{ident} AS a", "band_idx", "band_hash")
+    right = allb.selectExpr(f"{ident} AS b", "_new AS _new_b", "band_idx", "band_hash")
     # lazy lineage truncation: the candidate and verified PAIR sets are
     # tiny but referenced several times below; without it every reference
     # re-embeds the full banding/verify subtree and the composed plan
@@ -1682,15 +1636,12 @@ def near_dedup_incremental(
         return df.localCheckpoint(eager=False) if truncate_lineage else df
 
     cands = _ckpt(
-        left.join(right, ["band_idx", "band_hash"], "inner")
-        .where(F.col("a") != F.col("b"))
-        .where(~F.col("_new_b") | (F.col("a") < F.col("b")))
+        left.join(right, ["band_idx", "band_hash"])
+        .where("a != b AND (NOT _new_b OR a < b)")
         .select("a", "b", "_new_b")
         .distinct()
     )
-    union_docs = new_docs.select(F.col(id_col), F.col(text_col)).unionByName(
-        old_docs.select(F.col(id_col), F.col(text_col))
-    )
+    union_docs = new_docs.select(id_col, text_col).unionByName(old_docs.select(id_col, text_col))
     verified = _ckpt(
         ngram_jaccard_pairs(
             union_docs,
@@ -1702,8 +1653,8 @@ def near_dedup_incremental(
         ).join(cands.select("a", "b", "_new_b"), ["a", "b"])
     )
     # any new doc similar to an OLD doc is dropped outright
-    dup_of_old = verified.where(~F.col("_new_b")).select(F.col("a").alias(id_col)).distinct()
+    dup_of_old = verified.where("NOT _new_b").selectExpr(f"a AS {ident}").distinct()
     fresh = new_docs.join(dup_of_old, id_col, "left_anti")
     # new-only pairs: transitive representative selection as usual
-    new_pairs = verified.where(F.col("_new_b")).select("a", "b").distinct()
+    new_pairs = verified.where("_new_b").select("a", "b").distinct()
     return near_dedup_representatives(fresh, new_pairs, id_col=id_col)

@@ -29,7 +29,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.vectors import cosine_similarity, dot, dot_literal, l2_norm
+from ..functions.vectors import cosine_similarity, dot, dot_literal, dot_sql, l2_norm
 
 
 def _as_double(col):
@@ -485,9 +485,9 @@ def _assign_cells_blas(
                 }
             )
 
-    return df.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")).mapInPandas(
-        kernel, schema=schema
-    )
+    return df.selectExpr(
+        f"`{id_col}` AS _id", f"CAST(`{vec_col}` AS array<double>) AS _v"
+    ).mapInPandas(kernel, schema=schema)
 
 
 def ivf_topk(
@@ -778,9 +778,8 @@ def semantic_dedup_pairs(
         raise ValueError("pass the embedding dim explicitly (e.g. dim=64)")
     if assign_strategy == "blas":
         spark = df.sparkSession
-        assigned = _assign_cells_blas(df, "x", id_col, vec_col, centroids, 1)
-        assigned = assigned.select(
-            "x", "_v", "_n", F.element_at("_cells", 1).alias("_cell")
+        assigned = _assign_cells_blas(df, "x", id_col, vec_col, centroids, 1).selectExpr(
+            "x", "_v", "_n", "element_at(_cells, 1) AS _cell"
         )
         # materialize the assignment ONCE (scale-adaptive width — the
         # testdata parquet is one row group, i.e. one scan partition): it
@@ -844,7 +843,7 @@ def semantic_dedup_pairs(
             block_side = (
                 assigned
                 if n_blocks == 1
-                else assigned.where(F.pmod(F.xxhash64("x"), F.lit(n_blocks)) == blk)
+                else assigned.where(f"pmod(xxhash64(x), {n_blocks}) = {blk}")
             )
             pdf = block_side.select("x", "_cell", "_v").toPandas()
             if not len(pdf):
@@ -872,24 +871,13 @@ def semantic_dedup_pairs(
         # kernel-computed numpy norms the join form used — bitwise
         # identical cos_sim, exact >= threshold boundary; cost is
         # O(survivors), not O(Σ|cell|²)
-        va = assigned.select(
-            F.col("x").alias("a"), F.col("_v").alias("_va"), F.col("_n").alias("_na")
-        )
-        vb = assigned.select(
-            F.col("x").alias("b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
-        )
+        # (the same expression order as _cos, built as SQL text)
         return (
-            cand.join(va, "a")
-            .join(vb, "b")
-            .withColumn(
-                "cos_sim",
-                _cos(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"), dim),
-            )
-            .where(F.col("cos_sim") >= threshold)
-            .select(
-                "a", "b", F.round("cos_sim", 6).alias("cos_sim"),
-                F.col("_cell").cast("int").alias("cell"),
-            )
+            cand.join(assigned.selectExpr("x AS a", "_v AS _va", "_n AS _na"), "a")
+            .join(assigned.selectExpr("x AS b", "_v AS _vb", "_n AS _nb"), "b")
+            .selectExpr("a", "b", "_cell", f"{dot_sql('_va', '_vb')} / (_na * _nb) AS cos_sim")
+            .where(f"cos_sim >= {float(threshold)!r}D")
+            .selectExpr("a", "b", "round(cos_sim, 6) AS cos_sim", "CAST(_cell AS int) AS cell")
         )
     elif assign_strategy == "expr":
         base = df.select(

@@ -81,7 +81,7 @@ def _gram_stream(
     return built.where(F.col("_last").isNotNull()).select(
         id_col,
         "pos",
-        _word_hash(F.col("_gram"), hash_mode).alias("_g"),
+        _word_hash("_gram", hash_mode).alias("_g"),
         F.length("_gram").alias("_gl"),
     )
 
@@ -269,7 +269,7 @@ def line_dedup(
     eligible = lines.where(F.length("line") >= min_line_chars).select(
         id_col,
         "line_idx",
-        _word_hash(F.col("line"), hash_mode).alias("_h"),
+        _word_hash("line", hash_mode).alias("_h"),
         F.length("line").alias("_hl"),
     )
     firsts = (

@@ -7,42 +7,59 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
+from types import SimpleNamespace
+
+import pytest
+
+ROOT = Path(__file__).resolve().parents[1]
+JOB = str(ROOT / "jobs" / "dedup_corpus.py")
 
 
 def _run(args):
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/dedup_corpus.py", *args],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        [sys.executable, JOB, *args],
+        capture_output=True, text=True, cwd=str(ROOT), timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
     return json.loads(line)
 
 
-def test_dedup_corpus_job_full_then_incremental(spark, tmp_path):
+@pytest.fixture(scope="module")
+def minhash_runs(spark, tmp_path_factory):
+    """The minhash scenario two tests share: a full run over shard0, then
+    a ``--history-keys`` increment of shard1 against its outputs."""
+    tmp = tmp_path_factory.mktemp("minhash_runs")
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
-    old_shard = str(tmp_path / "shard0")
-    new_shard = str(tmp_path / "shard1")
+    old_shard = str(tmp / "shard0")
+    new_shard = str(tmp / "shard1")
     docs.where("doc_id < 30").write.parquet(old_shard)
     # the new shard overlaps the old one (ids 20-29 duplicated content)
     # plus brings fresh docs
     docs.where("doc_id >= 20 and doc_id < 60").write.parquet(new_shard)
 
-    out0 = str(tmp_path / "run0")
+    out0 = str(tmp / "run0")
     m0 = _run(["--documents", old_shard, "--output", out0, "--master", "local[4]"])
-    assert m0["docs_in"] == 30 and 0 < m0["docs_kept"] <= 30
-    assert m0["cap_accounting"] is not None
-    assert m0["cap_accounting"]["rows_dropped"] == 0
-
-    out1 = str(tmp_path / "run1")
+    out1 = str(tmp / "run1")
     m1 = _run([
         "--documents", new_shard, "--output", out1, "--mode", "incremental",
         "--history-keys", f"{out0}/content_keys",
         "--old-documents", f"{out0}/documents_kept",
         "--master", "local[4]",
     ])
+    return SimpleNamespace(new_shard=new_shard, out0=out0, m0=m0, out1=out1, m1=m1)
+
+
+def test_dedup_corpus_job_full_then_incremental(spark, minhash_runs):
+    r = minhash_runs
+    out0, m0, out1, m1 = r.out0, r.m0, r.out1, r.m1
+    assert m0["docs_in"] == 30 and 0 < m0["docs_kept"] <= 30
+    assert m0["cap_accounting"] is not None
+    assert m0["cap_accounting"]["rows_dropped"] == 0
+
     # the 10 overlapping docs (20-29) are exact dups of history -> dropped
     assert m1["docs_in"] == 40
     assert m1["docs_kept"] <= 30
@@ -75,20 +92,11 @@ def test_dedup_corpus_job_simhash_strategy(spark, tmp_path):
     assert spark.read.parquet(f"{out}/documents_kept").count() == m["docs_kept"]
 
 
-def test_dedup_corpus_job_incremental_prev_artifacts(spark, tmp_path):
+def test_dedup_corpus_job_incremental_prev_artifacts(spark, tmp_path, minhash_runs):
     """Increment consuming the previous run's persisted artifacts:
     results identical to the text-derived path, the band table grows to
     cover the union corpus, and band_params mismatches fail loudly."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    old_shard = str(tmp_path / "shard0")
-    new_shard = str(tmp_path / "shard1")
-    docs.where("doc_id < 30").write.parquet(old_shard)
-    docs.where("doc_id >= 20 and doc_id < 60").write.parquet(new_shard)
-
-    out0 = str(tmp_path / "run0")
-    m0 = _run(["--documents", old_shard, "--output", out0, "--master", "local[4]"])
+    new_shard, out0, m0 = minhash_runs.new_shard, minhash_runs.out0, minhash_runs.m0
     # full run persisted the incremental artifacts
     bands0 = spark.read.parquet(f"{out0}/minhash_bands")
     assert bands0.select("doc_id").distinct().count() == m0["docs_kept"]
@@ -102,13 +110,8 @@ def test_dedup_corpus_job_incremental_prev_artifacts(spark, tmp_path):
         "--old-documents", f"{out0}/documents_kept",
         "--master", "local[4]",
     ])
-    out_b = str(tmp_path / "run1b")
-    m_b = _run([
-        "--documents", new_shard, "--output", out_b, "--mode", "incremental",
-        "--history-keys", f"{out0}/content_keys",
-        "--old-documents", f"{out0}/documents_kept",
-        "--master", "local[4]",
-    ])
+    # the text-derived (--history-keys) increment of the same shard
+    out_b, m_b = minhash_runs.out1, minhash_runs.m1
     ids_a = sorted(r.doc_id for r in spark.read.parquet(f"{out_a}/documents_kept").collect())
     ids_b = sorted(r.doc_id for r in spark.read.parquet(f"{out_b}/documents_kept").collect())
     assert ids_a == ids_b and m_a["docs_kept"] == m_b["docs_kept"]
@@ -173,10 +176,10 @@ def test_dedup_corpus_job_kill_resume_identical(spark, tmp_path):
 
     out_kr = str(tmp_path / "killed")
     bad = subprocess.run(
-        [sys.executable, "/root/repo/jobs/dedup_corpus.py",
+        [sys.executable, JOB,
          "--documents", shard, "--output", out_kr, "--master", "local[4]",
          "--run-id", "r1", "--fail-after-stage", "1"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=str(ROOT), timeout=600,
     )
     assert bad.returncode != 0 and "simulated failure after stage 1" in bad.stderr
     # exact + pairs stages committed; kept not yet written

@@ -14,8 +14,9 @@ The scale discipline, enforced rather than promised:
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.append("/root/repo/tools")
+sys.path.append(str(Path(__file__).resolve().parents[1] / "tools"))
 
 BNLJ_ALLOWED = {
     # brute-force top-k baseline: the 5-row query side broadcasts; the

@@ -7,14 +7,17 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _run(args):
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/select_corpus.py", *args],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        [sys.executable, str(ROOT / "jobs" / "select_corpus.py"), *args],
+        capture_output=True, text=True, cwd=str(ROOT), timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import datetime as dt
+from pathlib import Path
 
 import pandas as pd
 
@@ -19,6 +20,8 @@ from pyppi_spark.sources import (
     write_debug_csv,
 )
 from pyppi_spark.sources.fixed_width import format_fixed_width_line
+
+FIXTURES = Path(__file__).resolve().parents[1] / "fixtures"
 
 
 def t(s: float):
@@ -136,7 +139,7 @@ def test_jsonl_source_quarantine_and_unicode(spark):
     from pyppi_spark.sources.jsonl import read_jsonl_documents, split_corrupt
 
     df = read_jsonl_documents(
-        spark, "/root/repo/fixtures/documents.jsonl",
+        spark, str(FIXTURES / "documents.jsonl"),
         schema="doc_id bigint, text string, lang string, score double",
     )
     df.persist()

@@ -3,6 +3,8 @@ operator (two-definition agreement, SURVEY.md §5.3 item 2)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from pyppi_spark.operators import with_session_id
@@ -193,7 +195,7 @@ def test_jsonl_stream_equals_batch(spark, tmp_path):
 
     landing = tmp_path / "landing"
     landing.mkdir()
-    shutil.copy("/root/repo/fixtures/documents.jsonl", landing / "part0.jsonl")
+    shutil.copy(Path(__file__).resolve().parents[1] / "fixtures" / "documents.jsonl", landing / "part0.jsonl")
     schema = "doc_id bigint, text string, lang string, score double"
 
     batch = read_jsonl_documents(spark, str(landing), schema=schema)

@@ -31,8 +31,8 @@ def old_signatures(df, text_col="text", id_col="doc_id", num_hashes=64,
     a, b = _minhash_coeffs(num_hashes, seed)
     words = df.select(
         F.col(id_col),
-        F.posexplode(F.split(_normalize(F.col(text_col)), " ")).alias("_pos", "_wd"),
-    ).select(F.col(id_col), "_pos", _word_hash(F.col("_wd"), hash_mode).alias("_h0"))
+        F.posexplode(F.split(_normalize(text_col), " ")).alias("_pos", "_wd"),
+    ).select(F.col(id_col), "_pos", _word_hash("_wd", hash_mode).alias("_h0"))
     w = Window.partitionBy(id_col).orderBy("_pos")
     lead_cols = [F.lead("_h0", j).over(w).alias(f"_h{j}") for j in range(1, shingle_n)]
     sh = (
@@ -41,7 +41,7 @@ def old_signatures(df, text_col="text", id_col="doc_id", num_hashes=64,
         .select(
             F.col(id_col),
             F.pmod(
-                _word_hash(F.concat_ws("|", *[f"_h{j}" for j in range(shingle_n)]), hash_mode),
+                _word_hash("concat_ws('|', " + ", ".join(f"_h{j}" for j in range(shingle_n)) + ")", hash_mode),
                 F.lit(MERSENNE_P),
             ).alias("_h"),
         )
