@@ -915,10 +915,14 @@ def q_ngram_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dedup_representatives(docs, dups).select("doc_id")
 
 
+# committed fixtures, resolved from this module's checkout so a second
+# checkout (an A/B of two commits) reads its own files
+FIXTURES_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+
 # committed deterministic fixture (pyppi_spark.operators.multimodal.
 # write_media_fixture, n=60 seed=42) — a real parquet file so the DuckDB
 # oracle reads the identical binary payloads the Spark kernels consume
-MEDIA_FIXTURE = "/root/repo/fixtures/media.parquet"
+MEDIA_FIXTURE = os.path.join(FIXTURES_DIR, "media.parquet")
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1230,7 +1234,7 @@ def q_embed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id")
 
 
-JSONL_FIXTURE = "/root/repo/fixtures/documents.jsonl"
+JSONL_FIXTURE = os.path.join(FIXTURES_DIR, "documents.jsonl")
 
 
 def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,6 +11,15 @@ largest-first) and writes a bucketed, sort-ordered table on the bucket id:
 - every bucket has nearly identical row counts → no stragglers,
 - the bucket id is a pure function of ``conv_id`` → semantics unchanged.
 
+``bucketBy`` does not store a bucket label as given: it writes row r to
+bucket ``pmod(murmur3(_bkt), n)``, Spark's ``hash()`` of the label. Bin b
+therefore carries the label ``bucket_labels(n)[b]``, the smallest
+non-negative int whose Spark bucket id is b, so each bin is exactly one
+physical bucket file. With the labels 0..n−1 taken as-is, bins collided:
+at n = 4 the four bins filled 2 buckets, at n = 128 only 78. Tables written
+with those labels still read correctly (``_bkt`` is still a function of
+``conv_id``), just unbalanced.
+
 This is the engine's layout answer to the reference's per-entity loop skew
 (a few huge PDB complexes dominating ``/root/reference/bin/setupPpiDb.py:163``)
 and the Spark-native stand-in for an Iceberg ``bucket(conv_id)`` partition
@@ -23,11 +32,47 @@ hash the long tail — ``assignment_mode="hybrid"`` does this.
 
 from __future__ import annotations
 
+import functools
 import heapq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 BUCKET_COL = "_bkt"
+
+_M32 = 0xFFFFFFFF
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def murmur3_int(value: int) -> int:
+    """Spark's ``Murmur3_x86_32.hashInt`` with seed 42: what SQL ``hash()``
+    and the ``bucketBy`` bucket id compute for an INT column, as a signed
+    32-bit int."""
+    k = (value & _M32) * 0xCC9E2D51 & _M32
+    k = _rotl32(k, 15) * 0x1B873593 & _M32
+    h = _rotl32(42 ^ k, 13)
+    h = (h * 5 + 0xE6546B64) & _M32
+    h ^= 4
+    h ^= h >> 16
+    h = h * 0x85EBCA6B & _M32
+    h ^= h >> 13
+    h = h * 0xC2B2AE35 & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >= 1 << 31 else h
+
+
+@functools.lru_cache(maxsize=None)
+def bucket_labels(n_buckets: int) -> tuple[int, ...]:
+    """``labels[b]``: the smallest non-negative int that ``bucketBy(n,
+    _bkt)`` (and ``repartition(n, _bkt)``) places in bucket b."""
+    labels: dict[int, int] = {}
+    v = 0
+    while len(labels) < n_buckets:
+        labels.setdefault(murmur3_int(v) % n_buckets, v)
+        v += 1
+    return tuple(labels[b] for b in range(n_buckets))
 
 
 DEFAULT_HEAVY_HITTERS = 100_000
@@ -39,10 +84,11 @@ def balanced_assignment(
     conv_col: str = "conv_id",
     heavy_hitters: int | None = DEFAULT_HEAVY_HITTERS,
 ) -> DataFrame:
-    """conv_id → bucket mapping (small DataFrame, broadcast-joinable).
+    """conv_id → bucket label mapping (small DataFrame, broadcast-joinable).
 
     Greedy bin-pack: sort conversations by size descending, always drop the
-    next conversation into the currently-lightest bucket. ``heavy_hitters``
+    next conversation into the currently-lightest bin; bin b is written as
+    the label ``bucket_labels(n_buckets)[b]`` (module docstring). ``heavy_hitters``
     limits the exact packing to the K largest conversations (the rest are
     hashed by conv_id) — the DEFAULT, because collecting the full conv-size
     histogram is an unbounded driver collect (OOM at 10^12 turns), while
@@ -67,12 +113,13 @@ def balanced_assignment(
     # ties on size break by conv_id: collect() order is partition-layout-
     # dependent and the bin-pack must be identical across runs (invariant)
     rows.sort(key=lambda x: (-x[1], str(x[0])))
+    labels = bucket_labels(n_buckets)
     heap = [(0, b) for b in range(n_buckets)]
     heapq.heapify(heap)
     assign = []
     for cid, n in rows:
         load, b = heapq.heappop(heap)
-        assign.append((cid, b))
+        assign.append((cid, labels[b]))
         heapq.heappush(heap, (load + n, b))
 
     mapping = local_table(
@@ -84,9 +131,12 @@ def balanced_assignment(
     )
     if top_ids is not None:
         # long tail: stable hash of conv_id (size-agnostic, deterministic)
+        # picks the bin, written as that bin's label
         rest = sizes.select(conv_col).join(mapping.select(conv_col), conv_col, "left_anti")
-        hashed = rest.select(
-            conv_col, F.pmod(F.xxhash64(conv_col), F.lit(n_buckets)).cast("int").alias(BUCKET_COL)
+        hashed = rest.selectExpr(
+            f"`{conv_col}`",
+            f"element_at(array({', '.join(map(str, labels))}), "
+            f"CAST(pmod(xxhash64(`{conv_col}`), {n_buckets}) AS INT) + 1) AS {BUCKET_COL}",
         )
         mapping = mapping.unionByName(hashed)
     return mapping
@@ -115,7 +165,8 @@ def write_bucketed(
 ) -> None:
     """Write a bucketed, sort-ordered transcript table (the engine's
     canonical at-rest layout). ``balanced=True`` adds the bin-packed
-    ``_bkt`` column and buckets on it; ``False`` hash-buckets on conv_id."""
+    ``_bkt`` label column and buckets on it, one bin per bucket file;
+    ``False`` hash-buckets on conv_id."""
     if balanced:
         out = with_balanced_bucket(df, n_buckets, conv_col, heavy_hitters)
         bucket_key = BUCKET_COL

@@ -584,7 +584,10 @@ def ngram_jaccard_pairs(
        the perfbench ``corpus_dedup`` inputs (seed 22, ``local[4]``): the
        near-pairs step fell 5.5–10.0 → 2.7–4.2 s; its write's final plan
        went from 14 query stages (5 reused exchanges) to 6, plus the
-       6-stage checkpoint job;
+       6-stage checkpoint job. Candidate columns other than ``a``/``b``
+       ride through to the output after ``jaccard`` (the incremental path
+       carries ``_new_b``), so a caller needs no second materialization
+       of the pairs to join them back;
     1. shingle ROWS per candidate document (semi-join prune first): the
        token array zipped with its own left-shifted copies
        (``slice``+``concat`` — plain collection exprs, codegen) and
@@ -627,7 +630,8 @@ def ngram_jaccard_pairs(
     # the pairs feed the semi-join prune and both array attaches: truncate
     # them here, once, or each reference re-runs the whole upstream plan
     # (signatures + LSH when the caller hands over the unmaterialized plan)
-    cands = candidate_pairs.select("a", "b").localCheckpoint()
+    cands = candidate_pairs.localCheckpoint()
+    carry = [_q(c) for c in cands.columns if c not in ("a", "b")]
     ident = _q(id_col)
     # no .distinct(): the left_semi join below never multiplies left rows
     # for duplicate right keys, so the extra exchange+agg bought nothing
@@ -654,13 +658,13 @@ def ngram_jaccard_pairs(
         cands.join(gram_sets.selectExpr(f"{ident} AS a", "_gs AS _ga"), "a")
         .join(gram_sets.selectExpr(f"{ident} AS b", "_gs AS _gb"), "b")
         .selectExpr(
-            "a", "b", "size(array_intersect(_ga, _gb)) AS _inter",
+            "a", "b", *carry, "size(array_intersect(_ga, _gb)) AS _inter",
             "size(_ga) AS _na", "size(_gb) AS _nb",
         )
         # the old gram-row inner join emitted nothing for zero-overlap
         # pairs; filter them so output matches for any threshold
         .where("_inter > 0")
-        .selectExpr("a", "b", "_inter / (_na + _nb - _inter) AS jaccard")
+        .selectExpr("a", "b", "_inter / (_na + _nb - _inter) AS jaccard", *carry)
         .where(f"jaccard >= {float(threshold)!r}D")
     )
 
@@ -1617,41 +1621,31 @@ def near_dedup_incremental(
     ident = _q(id_col)
     left = allb.where("_new").selectExpr(f"{ident} AS a", "band_idx", "band_hash")
     right = allb.selectExpr(f"{ident} AS b", "_new AS _new_b", "band_idx", "band_hash")
-    # lazy lineage truncation: the candidate and verified PAIR sets are
-    # tiny but referenced several times below; without it every reference
-    # re-embeds the full banding/verify subtree and the composed plan
-    # grows combinatorially (measured 155 exchanges in the plan vs ~30
-    # truncated; execution mostly collapses via ReusedExchange, but
-    # planning cost and reuse misses do not). localCheckpoint(eager=False)
-    # materializes once at the first action — same mechanism the
-    # components loop uses. (At multi-node scale localCheckpoint blocks
-    # are not fault-tolerant; a production run materializes the exact
-    # stage to storage instead — jobs/dedup_corpus.py does.)
     # canonicalize orientation BEFORE the expensive Jaccard verify: a
     # new-new collision otherwise appears as both (x, y) and (y, x) and
     # each directed pair would be verified independently (2x the gram
-    # join work); new-old pairs keep a = new. truncate_lineage=False keeps
-    # the full lineage visible (tests count file scans in the composed plan)
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if truncate_lineage else df
-
-    cands = _ckpt(
+    # join work); new-old pairs keep a = new. The verify materializes the
+    # candidates itself and carries _new_b through to its output.
+    cands = (
         left.join(right, ["band_idx", "band_hash"])
         .where("a != b AND (NOT _new_b OR a < b)")
         .select("a", "b", "_new_b")
         .distinct()
     )
     union_docs = new_docs.select(id_col, text_col).unionByName(old_docs.select(id_col, text_col))
-    verified = _ckpt(
-        ngram_jaccard_pairs(
-            union_docs,
-            cands.select("a", "b"),
-            text_col=text_col,
-            id_col=id_col,
-            threshold=threshold,
-            shingle_n=shingle_n,
-        ).join(cands.select("a", "b", "_new_b"), ["a", "b"])
+    verified = ngram_jaccard_pairs(
+        union_docs, cands, text_col=text_col, id_col=id_col,
+        threshold=threshold, shingle_n=shingle_n,
     )
+    # lazy lineage truncation: the verified PAIR set is tiny but referenced
+    # twice below; without it each reference re-embeds the verify subtree.
+    # localCheckpoint(eager=False) materializes once at the first action —
+    # same mechanism the components loop uses. (At multi-node scale
+    # localCheckpoint blocks are not fault-tolerant; a production run
+    # materializes the exact stage to storage instead — jobs/dedup_corpus.py
+    # does.) truncate_lineage=False keeps the verify's lineage visible.
+    if truncate_lineage:
+        verified = verified.localCheckpoint(eager=False)
     # any new doc similar to an OLD doc is dropped outright
     dup_of_old = verified.where("NOT _new_b").selectExpr(f"a AS {ident}").distinct()
     fresh = new_docs.join(dup_of_old, id_col, "left_anti")

@@ -686,35 +686,51 @@ def test_near_dedup_incremental_old_bands_scans_old_text_once(spark, tmp_path):
 
     # O(increment) evidence: the old-docs file has exactly ONE distinct
     # scan (the Jaccard verify) in the banded plan, >= 2 (signatures +
-    # verify) otherwise. truncate_lineage=False disables the internal
-    # lazy localCheckpoints (which replace subtrees with RDD placeholders
-    # and would hide scans); a shared subtree re-printed under several
-    # parents gets fresh ExprIds per reference, so nodes are deduped with
-    # ExprIds stripped.
+    # verify) otherwise. truncate_lineage=False disables the lazy
+    # localCheckpoint of the verified pairs (which replaces the subtree
+    # with an RDD placeholder and would hide scans). The verify
+    # checkpoints its candidate pairs eagerly while the plan is built, so
+    # the plans of the SQL executions run during the build (read from the
+    # status store) count alongside the composed plan. A shared subtree
+    # re-printed under several parents gets fresh ExprIds per reference,
+    # so nodes are deduped with ExprIds stripped.
     import re
 
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return spark._jsparkSession.sharedState().statusStore().executionsList()
+
     def distinct_scans(path_tag, **kw):
+        execs = executions()
+        last_id = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
         df = near_dedup_incremental(
             step1, old, bands=32, rows_per_band=2, threshold=0.5,
             hash_mode="fast", truncate_lineage=False, **kw,
         )
-        s = df._jdf.queryExecution().executedPlan().toString()
+        plans = [df._jdf.queryExecution().executedPlan().toString()]
+        execs = executions()
+        for i in range(execs.size()):
+            if execs.apply(i).executionId() > last_id:
+                plans.append(execs.apply(i).physicalPlanDescription().split("== Initial Plan ==")[0])
         nodes = [
             m.group(0)
-            for m in re.finditer(r"FileScan parquet \[[^\]]*\][^\n]*", s)
+            for m in re.finditer(r"FileScan parquet \[[^\]]*\][^\n]*", "\n".join(plans))
             if path_tag in m.group(0)
         ]
         return {re.sub(r"#\d+", "#", n) for n in nodes}, len(nodes)
 
     # pytest tmp paths exceed the 100-char Location truncation default
     prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
+    prev_mode = spark.conf.get("spark.sql.ui.explainMode", "formatted")
     spark.conf.set("spark.sql.maxMetadataStringLength", "500")
+    spark.conf.set("spark.sql.ui.explainMode", "simple")
     try:
         d_banded, r_banded = distinct_scans("old_docs", old_bands=old_bands)
         d_texty, r_texty = distinct_scans("old_docs")
         d_bands, _ = distinct_scans("old_bands", old_bands=old_bands)
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", prev)
+        spark.conf.set("spark.sql.ui.explainMode", prev_mode)
     assert len(d_banded) == 1, f"old corpus scanned {len(d_banded)}x with persisted bands"
     assert len(d_bands) == 1  # the persisted band table feeds the join
     # contrast: the text-derived path additionally re-signs the old corpus

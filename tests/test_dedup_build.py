@@ -14,6 +14,8 @@ import contextlib
 import re
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Observation
 
 from pyppi_spark.operators.dedup import (
@@ -23,7 +25,7 @@ from pyppi_spark.operators.dedup import (
     near_dedup_representatives,
     ngram_jaccard_pairs,
 )
-from pyppi_spark.operators.similarity import semantic_dedup_pairs
+from pyppi_spark.operators.similarity import semantic_dedup_pairs, train_centroids_from_file
 
 BASE = "the quick brown fox jumps over the lazy dog near the river bank today"
 
@@ -169,3 +171,91 @@ def test_verify_over_unmaterialized_lsh_plan(spark):
     # no re-read of the LSH output per reference
     distinct_aggs = re.findall(r"HashAggregate\(keys=\[a#\d+L, b#\d+L\], functions=\[\]\)", text)
     assert len(distinct_aggs) == 2, text
+
+
+def _write_corpus(path, dim: int = 64) -> None:
+    """Word documents with planted exact (case/spacing) and near (one word
+    replaced) copies; copies' embeddings are the base's plus small noise.
+    Writes ``docs/`` (four files) and ``vectors.parquet`` under ``path``."""
+    rng = np.random.default_rng(7)
+    vocab = np.array([f"w{i:04d}" for i in range(3000)])
+    texts, embs = [], []
+    for i in range(240):
+        words = list(rng.choice(vocab, size=int(rng.integers(60, 100))))
+        e = rng.standard_normal(dim)
+        texts.append(" ".join(words))
+        embs.append(e)
+        if i % 3 == 0:
+            texts.append(" ".join(["replaced"] + words[1:]))
+            embs.append(e + rng.standard_normal(dim) * 0.01)
+        if i % 5 == 0:
+            texts.append("  ".join(words).upper())
+            embs.append(e + rng.standard_normal(dim) * 0.01)
+    ids = rng.permutation(len(texts)).astype(np.int64) + 1
+    emb = pa.FixedSizeListArray.from_arrays(pa.array(np.ravel(embs)), dim)
+    table = pa.table({"doc_id": ids, "text": texts, "embedding": emb.cast(pa.list_(pa.float64()))})
+    (path / "docs").mkdir()
+    per_file = -(-table.num_rows // 4)
+    for i in range(4):
+        pq.write_table(table.slice(i * per_file, per_file), str(path / "docs" / f"part-{i}.parquet"))
+    pq.write_table(table.select(["doc_id", "embedding"]), str(path / "vectors.parquet"))
+
+
+def _compiled_classes(spark) -> int:
+    """Generated classes compiled so far in this JVM (codegen cache misses)."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _clear_codegen_cache(spark) -> None:
+    """Empty the JVM-wide generated-class cache (a private field of
+    ``CodeGenerator``), so a count of compiled classes does not depend on
+    what earlier tests in the session compiled."""
+    cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    field = cls.getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).loadingCache().invalidateAll()
+
+
+def test_dedup_pass_reuses_compiled_code(spark, tmp_path):
+    """A second pass of the perfbench ``corpus_dedup`` pipeline (exact,
+    MinHash signatures, LSH with a skip cap, Jaccard verify,
+    representatives, SemDeDup pairs; each stage written and read back)
+    compiles no generated class. Its working set is over Spark's default
+    codegen cache (100 classes, LRU): at that size every pass recompiled
+    most of them. The session keeps 1000."""
+    from jobs.dedup_corpus import MINHASH_PARAMS as P
+
+    _write_corpus(tmp_path)
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+
+    def stage(name, df):
+        df.write.mode("overwrite").parquet(str(tmp_path / name))
+        return spark.read.parquet(str(tmp_path / name))
+
+    def dedup_pass():
+        uniq = stage("exact", exact_dedup(docs))
+        sigs = minhash_signatures(
+            uniq, num_hashes=P["num_hashes"], shingle_n=P["shingle_n"], seed=P["seed"],
+            hash_mode=P["hash_mode"],
+        )
+        cands = minhash_lsh_candidates(
+            sigs, bands=P["bands"], rows_per_band=P["rows_per_band"], max_bucket_size=10_000,
+            hot_bucket="skip", observation=Observation("caps"),
+        )
+        pairs = stage("pairs", ngram_jaccard_pairs(uniq, cands, threshold=0.8).select("a", "b"))
+        stage("kept", near_dedup_representatives(uniq, pairs))
+        cents = train_centroids_from_file(str(tmp_path / "vectors.parquet"), id_col="doc_id")
+        stage("semantic", semantic_dedup_pairs(docs, cents, threshold=0.95, id_col="doc_id", dim=64))
+
+    _clear_codegen_cache(spark)
+    n0 = _compiled_classes(spark)
+    dedup_pass()
+    n1 = _compiled_classes(spark)
+    dedup_pass()
+    n2 = _compiled_classes(spark)
+    assert n1 - n0 > 100, f"first pass compiled {n1 - n0} classes: under the default cache size"
+    assert n2 - n1 == 0, f"second pass recompiled {n2 - n1} of the first pass's {n1 - n0} classes"
+    kept = spark.read.parquet(str(tmp_path / "kept")).count()
+    assert 0 < kept < docs.count()

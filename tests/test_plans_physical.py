@@ -106,20 +106,77 @@ def test_bucketed_conv_features_one_aggregation_no_shuffle(spark, tiny_df, tmp_p
     assert out.count() == conv_features(tiny_df).count()
 
 
-def test_balanced_assignment_is_greedy_bin_pack(spark, tiny_df, tiny_pdf):
-    """conv→bucket mapping equals a plain-Python largest-first greedy pack
-    (ties by conv_id) of the conversation sizes."""
+def _greedy_pack(tiny_pdf, n_buckets: int) -> tuple[dict[str, int], list[int]]:
+    """Plain-Python largest-first greedy pack (ties by conv_id) of the
+    conversation sizes: conv_id → bin, and the rows per bin."""
     import heapq
 
-    from pyppi_spark.io import balanced_assignment
-
     sizes = tiny_pdf.groupby("conv_id").size()
-    heap = [(0, b) for b in range(4)]
-    want = {}
+    heap = [(0, b) for b in range(n_buckets)]
+    loads, assign = [0] * n_buckets, {}
     for cid, n in sorted(sizes.items(), key=lambda x: (-x[1], x[0])):
         load, b = heapq.heappop(heap)
-        want[cid] = b
+        assign[cid] = b
+        loads[b] = load + n
         heapq.heappush(heap, (load + n, b))
+    return assign, loads
+
+
+def test_balanced_assignment_is_greedy_bin_pack(spark, tiny_df, tiny_pdf):
+    """conv→bucket mapping equals a plain-Python largest-first greedy pack
+    (ties by conv_id) of the conversation sizes, each bin written as its
+    bucket label."""
+    from pyppi_spark.io import balanced_assignment, bucket_labels
+
+    assign, _ = _greedy_pack(tiny_pdf, 4)
+    labels = bucket_labels(4)
+    want = {cid: labels[b] for cid, b in assign.items()}
     mapping = balanced_assignment(tiny_df, 4, heavy_hitters=None)
     assert mapping.dtypes == [("conv_id", "string"), ("_bkt", "int")]
     assert {r.conv_id: r._bkt for r in mapping.collect()} == want
+
+
+def test_bucket_labels_match_spark_hash(spark):
+    """The Python Murmur3 port equals SQL ``hash()`` on INTs, and label b
+    lands in bucket b under Spark's bucket-id expression,
+    ``pmod(hash(_bkt), n)``."""
+    from pyppi_spark.io import bucket_labels, murmur3_int
+
+    vals = list(range(-300, 1000)) + [2**31 - 1, -(2**31), 123456789, -987654321]
+    got = spark.createDataFrame([(v,) for v in vals], "v int").selectExpr("v", "hash(v) AS h").collect()
+    assert {r.v: r.h for r in got} == {v: murmur3_int(v) for v in vals}
+    for n in (1, 4, 8, 128):
+        labels = bucket_labels(n)
+        assert len(set(labels)) == n and min(labels) >= 0
+        ids = spark.createDataFrame([(v,) for v in labels], "v int").selectExpr(f"pmod(hash(v), {n}) AS b")
+        assert [r.b for r in ids.collect()] == list(range(n))
+
+
+@pytest.mark.parametrize("heavy_hitters", [None, 5])
+def test_balanced_buckets_are_physical(spark, tiny_df, tiny_pdf, tmp_path, heavy_hitters):
+    """Each bin is one physical bucket: every written file holds one
+    ``_bkt`` label, sits in that label's bin's bucket, and (exact packing)
+    holds exactly the bin's greedy load. With a hashed tail
+    (``heavy_hitters=5``) every label is still alone in its file."""
+    import pyarrow.parquet as pq
+
+    loc = tmp_path / "bucketed_phys"
+    write_bucketed(tiny_df, "t_plans_bucketed_phys", str(loc), n_buckets=4, heavy_hitters=heavy_hitters)
+    files = {}
+    for f in sorted(loc.glob("*.parquet")):
+        bkt = pq.read_table(f, columns=["_bkt"]).column("_bkt").to_pylist()
+        assert len(set(bkt)) == 1, (f.name, sorted(set(bkt)))
+        files[f.name] = (bkt[0], len(bkt))
+
+    from pyppi_spark.io import bucket_labels
+
+    labels = bucket_labels(4)
+    rows = {}
+    for name, (label, n) in files.items():
+        b = labels.index(label)
+        assert int(re.search(r"_(\d{5})\.c\d{3}", name).group(1)) == b, name
+        rows[b] = rows.get(b, 0) + n
+    assert sum(rows.values()) == len(tiny_pdf)
+    if heavy_hitters is None:
+        _, loads = _greedy_pack(tiny_pdf, 4)
+        assert rows == dict(enumerate(loads))

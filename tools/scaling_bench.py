@@ -33,6 +33,7 @@ DATA_DIR = os.environ.get("SPARK_GRAFT_BENCH_DATA", "/tmp/pyppi_bench_transcript
 TABLE_DIR = os.environ.get("SPARK_GRAFT_BENCH_TABLE", "/tmp/pyppi_bench_balanced")
 N_CONVS = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "50000"))
 N_BUCKETS = 128
+TABLE_MARKER = "_SUCCESS_TABLE_LABELED"
 LEVELS = (8, 32)
 MEM = {8: "8g", 32: "32g"}
 JOB_DESC = {
@@ -70,7 +71,10 @@ def ensure_data() -> None:
         gen_transcripts_df(spark, N_CONVS, seed=42).write.mode("overwrite").parquet(DATA_DIR)
         spark.stop()
         open(marker, "w").write("ok")
-    if not os.path.exists(os.path.join(TABLE_DIR, "_SUCCESS_TABLE")):
+    # the marker names the layout: a table written before bins carried
+    # their bucket labels (pyppi_spark.io) is rewritten, since quarter_run
+    # selects bins by label
+    if not os.path.exists(os.path.join(TABLE_DIR, TABLE_MARKER)):
         from pyppi_spark.session import build_spark
         from pyppi_spark.io import write_bucketed
 
@@ -80,7 +84,7 @@ def ensure_data() -> None:
             df, "bench_transcripts_balanced", TABLE_DIR, n_buckets=N_BUCKETS, balanced=True
         )
         spark.stop()
-        open(os.path.join(TABLE_DIR, "_SUCCESS_TABLE"), "w").write("ok")
+        open(os.path.join(TABLE_DIR, TABLE_MARKER), "w").write("ok")
 
 
 def make_job(part, job_name: str):
@@ -363,14 +367,15 @@ def quarter_run(
     from pyspark.sql import functions as F
 
     from pyppi_spark.session import build_spark
-    from pyppi_spark.io import register_bucketed
+    from pyppi_spark.io import bucket_labels, register_bucketed
 
     spark = build_spark(
         f"scale_q{lo}_{hi}", master=f"local[{cpus}]", shuffle_partitions=8 * cpus,
         extra_conf=JOB_CONF.get(job_name),
     )
     bt = register_bucketed(spark, f"bench_balanced_q{lo}", TABLE_DIR, N_BUCKETS)
-    part = bt.where((F.col("_bkt") >= lo) & (F.col("_bkt") < hi))
+    # bins lo..hi-1 are the buckets lo..hi-1; their rows carry the bins' labels
+    part = bt.where(F.col("_bkt").isin(list(bucket_labels(N_BUCKETS)[lo:hi])))
     n_turns = part.count()
     job = make_job(part, job_name)
 
