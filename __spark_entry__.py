@@ -833,8 +833,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat approximate top-k. The coarse quantizer is pinned as a pure
     function of the embeddings parquet (numpy k-means over an md5-ordered
     sample — train_centroids_from_file), so the SQL oracle reproduces the
-    ENTIRE query: assignment, probing, and exact scoring, value-for-value.
-    (The Spark-sampled trainer is exercised in tests/test_similarity.py.)"""
+    ENTIRE query: assignment, probing, and exact scoring, value-for-value."""
     from pyppi_spark.operators.similarity import ivf_topk, train_centroids_from_file
 
     cents = train_centroids_from_file(
@@ -1689,13 +1688,13 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-bounded pair machinery as quality_dedup; two tiny label-keyed
     aggs on top of components."""
     from pyppi_spark.operators import minhash_lsh_candidates, minhash_signatures
-    from pyppi_spark.operators.dedup import near_dup_components, ngram_jaccard_pairs
+    from pyppi_spark.operators.dedup import ngram_jaccard_pairs, partition_components
 
     docs = _documents(spark, sf_dir)
     sigs = minhash_signatures(docs)
     cands = minhash_lsh_candidates(sigs, bands=32, rows_per_band=2)
     pairs = ngram_jaccard_pairs(docs, cands, threshold=0.8)
-    comp = near_dup_components(pairs)
+    comp = partition_components(pairs)
     sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return sizes.groupBy("cluster_size").agg(
         F.count(F.lit(1)).cast("long").alias("n_clusters")

@@ -5,17 +5,19 @@ Each query is forced end-to-end with a ``noop``-format write (full
 computation, no driver collect). The flagship metric is feature-extraction
 throughput in turns/sec over the events stream mapped to the transcript
 schema (the BASELINE.json north metric, sandbox scale). Per-query shuffle
-write volume is sampled from the UI REST API (deltas of completed stages)
-so plan regressions that add exchanges are visible next to wall time.
+write volume is read from the UI REST API per Spark job group (each query's
+first rep runs under a group named after it; ``perfbench/tracing.py``
+``Tracer.engine_metrics``), so plan regressions that add exchanges are
+visible next to wall time.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -104,18 +106,23 @@ def force(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def shuffle_written_bytes(spark) -> int | None:
-    """Total shuffle write bytes across completed stages (UI REST)."""
-    try:
-        url = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{url}/api/v1/applications/{app}/stages?status=COMPLETE", timeout=5
-        ) as r:
-            stages = json.loads(r.read())
-        return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    except Exception:
-        return None
+def load_tracing():
+    """``perfbench/tracing.py`` by path (``perfbench`` is not a package)."""
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench", "tracing.py")
+    spec = importlib.util.spec_from_file_location("tracing", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def shuffle_write_mb(groups: dict[str, dict], names) -> dict[str, float]:
+    """Decimal-MB shuffle write of each name's job group, from
+    ``Tracer.engine_metrics`` (which reports MiB); a group that ran no
+    shuffle stage reads 0."""
+    return {
+        n: round(groups.get(n, {}).get("shuffle_write_mb", 0.0) * (1024 * 1024) / 1e6, 2)
+        for n in names
+    }
 
 
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
@@ -128,12 +135,15 @@ def timed(fn) -> float:
 
 
 def main() -> None:
+    tracing = load_tracing()
     spark = build_spark(
         "bench",
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS,
-        extra_conf={"spark.ui.enabled": "true"},  # REST shuffle metrics
+        # REST per-group shuffle metrics; stage history kept for the sweep
+        extra_conf=tracing.UI_CONF,
     )
+    tracer = tracing.Tracer(spark)
     qs = entrymod.queries()
 
     # untimed warm-up: parquet footer reads + first-stage codegen/JIT are
@@ -156,24 +166,22 @@ def main() -> None:
     # per-query best-of-REPS + median: single-shot timings on this VM made
     # round-over-round deltas uninterpretable (VERDICT r02 "what's wrong"
     # #3); best-of damps host noise, the median is reported alongside so a
-    # lucky best is visible. Shuffle bytes are sampled around the first rep
+    # lucky best is visible. The first rep runs under a job group named
+    # after the query, whose shuffle bytes are read after the sweep
     # (identical plan each rep — bytes don't vary).
     timings: dict[str, float] = {}
     timings_median: dict[str, float] = {}
-    shuffle_mb: dict[str, float] = {}
     total = 0.0
     for name in HEADLINE:
         walls = []
-        s0 = shuffle_written_bytes(spark)
+        tracer.group(name)
         walls.append(timed(lambda: force(qs[name](spark, SF_DIR))))
-        s1 = shuffle_written_bytes(spark)
+        tracer.group("untimed")
         for _ in range(REPS - 1):
             walls.append(timed(lambda: force(qs[name](spark, SF_DIR))))
         walls.sort()
         timings[name] = round(walls[0], 3)
         timings_median[name] = round(walls[len(walls) // 2], 3)
-        if s0 is not None and s1 is not None:
-            shuffle_mb[name] = round((s1 - s0) / 1e6, 2)
         total += walls[0]
 
     # production-mode fast paths: the driver queries use portable (md5)
@@ -309,16 +317,14 @@ def main() -> None:
         force(conv_features_from_turns(tf, percentile_mode=percentile_mode))
         tf.unpersist()
 
-    s0 = shuffle_written_bytes(spark)
+    tracer.group("feature_extraction")
     feat_walls = [timed(feature_job)]
-    s1 = shuffle_written_bytes(spark)
+    tracer.group("untimed")
     feat_walls += [timed(feature_job) for _ in range(REPS - 1)]
     feat_walls.sort()
     feat_dt = feat_walls[0]
     timings["feature_extraction"] = round(feat_dt, 3)
     timings_median["feature_extraction"] = round(feat_walls[len(feat_walls) // 2], 3)
-    if s0 is not None and s1 is not None:
-        shuffle_mb["feature_extraction"] = round((s1 - s0) / 1e6, 2)
     total += feat_dt
     # A/B: the approx-percentile production variant (constant agg state)
     approx_walls = sorted(timed(lambda: feature_job("approx")) for _ in range(REPS))
@@ -327,6 +333,8 @@ def main() -> None:
     control_last = round(min(
         timed(lambda: force(qs["sessionize"](spark, SF_DIR))) for _ in range(3)
     ), 3)
+    groups, _ = tracer.engine_metrics()
+    shuffle_mb = shuffle_write_mb(groups, HEADLINE + ["feature_extraction"])
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     headline = {

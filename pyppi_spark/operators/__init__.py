@@ -14,8 +14,6 @@ from .dedup import (
     simhash64,
     ngram_jaccard_pairs,
     near_dedup_representatives,
-    near_dup_components,
-    star_components,
     winnow_fingerprints,
     winnow_fingerprints_kernel,
     content_keys,
@@ -31,16 +29,9 @@ from .sampling import dataset_split, stratified_sample
 from .similarity import (
     brute_force_topk,
     pit_topk,
-    lsh_topk,
     ivf_topk,
-    embedding_neardup_pairs,
-    semantic_dedup,
     semantic_dedup_pairs,
     threshold_pairs_exact,
-    train_pq,
-    pq_encode,
-    pq_topk,
-    train_ivf_pq,
     ivf_pq_encode,
     ivf_pq_topk,
     train_ivf_pq_from_file,
@@ -78,8 +69,6 @@ __all__ = [
     "winnow_candidate_pairs_incremental",
     "ngram_jaccard_pairs",
     "near_dedup_representatives",
-    "near_dup_components",
-    "star_components",
     "winnow_fingerprints",
     "winnow_fingerprints_kernel",
     "content_keys",
@@ -92,16 +81,9 @@ __all__ = [
     "repetition_report",
     "brute_force_topk",
     "pit_topk",
-    "lsh_topk",
     "ivf_topk",
-    "embedding_neardup_pairs",
-    "semantic_dedup",
     "semantic_dedup_pairs",
     "threshold_pairs_exact",
-    "train_pq",
-    "pq_encode",
-    "pq_topk",
-    "train_ivf_pq",
     "ivf_pq_encode",
     "ivf_pq_topk",
     "train_ivf_pq_from_file",

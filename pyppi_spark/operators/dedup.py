@@ -669,106 +669,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _symmetric_edges(dup_pairs: DataFrame) -> DataFrame:
-    e = dup_pairs.select(F.col("a").alias("s"), F.col("b").alias("d"))
-    return (
-        e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-
-def _edge_digest(edges: DataFrame):
-    # bit_xor digest: overflow-free under ANSI (sum of hashes throws),
-    # order-free, and rows are distinct so nothing cancels
-    return edges.agg(F.expr("bit_xor(xxhash64(s, d))")).collect()[0][0]
-
-
-def star_components(
-    dup_pairs: DataFrame,
-    max_iters: int = 50,
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") → (node, label)
-    with ``label`` = component min — identical output contract to the
-    min-label propagation in ``near_dup_components``.
-
-    Converges in O(log n) rounds on ANY graph (vs O(diameter) for label
-    propagation), so a pathological million-hop near-dup chain costs ~20
-    rounds instead of a million. Each round is two grouped mins + two
-    equi-joins over the edge set:
-
-    - large-star: every neighbor v > u re-attaches to m(u) = min(Γ(u)∪{u});
-    - small-star: among edges oriented u > v, every v ∈ Γ⁻(u)∪{u} except
-      the min re-attaches to that min.
-
-    ``localCheckpoint`` truncates the per-round lineage; convergence is an
-    unchanged bit_xor digest of the canonical (a<b) edge set. At the joint
-    fixpoint the edges form stars: every node's min neighbor (or itself)
-    is its component label.
-    """
-    edges = _symmetric_edges(dup_pairs)
-    nodes = edges.select(F.col("s").alias("node")).distinct().localCheckpoint()
-    prev = None
-    converged = False
-    for _ in range(max_iters):
-        # large-star over the symmetric edge set: group on s, neighbors d
-        mins_l = (
-            edges.groupBy("s")
-            .agg(F.min("d").alias("_mn"))
-            .select("s", F.least(F.col("s"), F.col("_mn")).alias("_m"))
-        )
-        large = (
-            edges.join(mins_l, "s")
-            .where(F.col("d") > F.col("s"))
-            .select(F.col("d").alias("s"), F.col("_m").alias("d"))
-            .where(F.col("s") != F.col("d"))
-            .distinct()
-        )
-        sym_l = (
-            large.unionByName(large.select(F.col("d").alias("s"), F.col("s").alias("d")))
-            .distinct()
-            .localCheckpoint()
-        )
-        # small-star over edges oriented u > v: group on the larger endpoint
-        oriented = sym_l.where(F.col("s") > F.col("d"))
-        mins_s = oriented.groupBy("s").agg(F.min("d").alias("_m"))  # _m < s
-        att_nbrs = (
-            oriented.join(mins_s, "s")
-            .select(F.col("d").alias("s"), F.col("_m").alias("d"))
-            .where(F.col("s") != F.col("d"))
-        )
-        att_self = mins_s.select(F.col("s"), F.col("_m").alias("d"))
-        small = att_nbrs.unionByName(att_self).distinct()
-        edges = (
-            small.unionByName(small.select(F.col("d").alias("s"), F.col("s").alias("d")))
-            .distinct()
-            .localCheckpoint()
-        )
-        digest = _edge_digest(edges.where(F.col("s") < F.col("d")))
-        if digest == prev:
-            converged = True
-            break
-        prev = digest
-    if not converged:
-        raise RuntimeError(
-            f"star_components did not reach a fixpoint in {max_iters} rounds"
-        )
-    direct = (
-        edges.groupBy("s")
-        .agg(F.min("d").alias("_mn"))
-        .select("s", F.least(F.col("s"), F.col("_mn")).alias("label"))
-    )
-    # nodes can only leave the edge set once their whole component is a
-    # star rooted elsewhere — re-attach any absentee to itself (safe: the
-    # star ops preserve connectivity, so absentees are roots)
-    return (
-        nodes.join(direct.select(F.col("s").alias("node"), "label"), "node", "left")
-        .select("node", F.coalesce("label", "node").alias("label"))
-    )
-
-
 def _uf_mapping_kernel():
     """mapInPandas factory: exact connected components of THIS PARTITION's
     edge rows (s, d) via union-find with path compression and union-by-min
@@ -796,8 +696,8 @@ def _uf_mapping_kernel():
             for s, d in zip(b["s"].tolist(), b["d"].tolist()):
                 if s == d:
                     # self edges carry no connectivity; dropping them (not
-                    # registering the node) matches _symmetric_edges'
-                    # s != d filter, so a self-loop-only node gets no row
+                    # registering the node) means a self-loop-only node
+                    # gets no row
                     continue
                 rs, rd = find(s), find(d)
                 if rs == rd:
@@ -819,9 +719,9 @@ def partition_components(
     dup_pairs: DataFrame,
     single_partition_max_edges: int = 5_000_000,
 ) -> DataFrame:
-    """Connected components by TWO-PHASE PARTITION CONTRACTION → (node,
-    label), label = component min — the same output contract as
-    ``near_dup_components`` at a fraction of the cost on dense graphs:
+    """Connected components over near-dup pairs (columns ``a``, ``b``) by
+    TWO-PHASE PARTITION CONTRACTION → (node, label), label = the smallest
+    id reachable from ``node``; only nodes of a non-self edge get a row:
 
     1. one ``mapInPandas`` union-find pass over the raw pair rows (no
        symmetric union, no distinct, no per-round join/checkpoint/digest
@@ -838,7 +738,8 @@ def partition_components(
        crossed a partition.
 
     Exactness does not depend on the input partitioning (components are a
-    set property); the label-propagation round cost it replaces was
+    set property), and the pass count is bounded on any graph (usually 2),
+    with no diameter budget; the min-label propagation it replaced cost
     2·|E|·rounds join rows plus a checkpoint+digest job pair per round —
     measured 9 s vs ~1 s on the sf1.0 embedding pair graph."""
     spark = dup_pairs.sparkSession
@@ -876,85 +777,10 @@ def partition_components(
     return lab
 
 
-def near_dup_components(
-    dup_pairs: DataFrame,
-    max_iters: int = 25,
-    algorithm: str = "auto",
-    star_max_iters: int = 50,
-) -> DataFrame:
-    """Connected components over near-dup pairs (columns ``a``, ``b``) →
-    (node, label) where ``label`` is the smallest id reachable from
-    ``node``.
-
-    ``algorithm``:
-
-    - ``"label"``: min-id label propagation — each round every node takes
-      min(own label, neighbors' labels): one equi-join + one hash
-      aggregation, converging in O(component diameter) rounds. Near-dup
-      graphs are almost-cliques (LSH+verify edges), so the diameter is
-      tiny and this is the cheapest path. Raises after ``max_iters``.
-    - ``"star"``: alternating large-star/small-star (``star_components``),
-      O(log n) rounds on any graph — the right tool for adversarially long
-      chains.
-    - ``"partition"``: two-phase partition contraction
-      (``partition_components``) — one union-find ``mapInPandas`` pass
-      per coarsening level, no per-round join/checkpoint/digest jobs;
-      converges in a BOUNDED number of passes (usually 2) on any graph.
-    - ``"auto"`` (default): ``partition_components`` — exact on any graph,
-      cheapest measured on both sparse doc graphs and dense embedding
-      pair graphs, and free of the diameter budget that made the old
-      label-then-star fallback necessary.
-
-    ``localCheckpoint`` truncates the lineage each round (an iterative plan
-    otherwise grows exponentially), and convergence is detected by a
-    content hash of the label set (labels only ever decrease, so an
-    unchanged hash means a fixpoint).
-    """
-    if algorithm not in ("label", "star", "auto", "partition"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    if algorithm in ("auto", "partition"):
-        return partition_components(dup_pairs)
-    if algorithm == "star":
-        return star_components(dup_pairs, max_iters=star_max_iters)
-    edges = _symmetric_edges(dup_pairs)
-    labels = (
-        edges.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
-    )
-    prev = None
-    converged = False
-    for _ in range(max_iters):
-        neigh = edges.join(
-            labels.select(F.col("node").alias("d"), "label"), "d"
-        ).select(F.col("s").alias("node"), "label")
-        labels = (
-            labels.unionByName(neigh)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
-        )
-        digest = labels.agg(F.expr("bit_xor(xxhash64(node, label))")).collect()[0][0]
-        if digest == prev:
-            converged = True
-            break
-        prev = digest
-    if not converged:
-        # non-converged labels silently under-merge duplicate clusters —
-        # fail loudly instead
-        raise RuntimeError(
-            f"near_dup_components did not reach a fixpoint in {max_iters} "
-            "rounds — component diameter exceeds max_iters"
-        )
-    return labels
-
-
 def near_dedup_representatives(
     df: DataFrame,
     dup_pairs: DataFrame,
     id_col: str = "doc_id",
-    transitive: bool = True,
-    max_iters: int = 25,
-    algorithm: str = "auto",
-    star_max_iters: int = 50,
     score_col: str | None = None,
 ) -> DataFrame:
     """Pick survivors given near-dup pairs: each connected component of the
@@ -974,37 +800,22 @@ def near_dedup_representatives(
     then min id among the maximal), sharing one exchange — component
     membership is tiny relative to the corpus (only docs in ≥1 pair).
 
-    ``max_iters``/``algorithm``/``star_max_iters`` pass through to
-    ``near_dup_components`` — the default ``algorithm="auto"`` runs the
-    two-phase partition contraction (``partition_components``), exact on
-    any graph in a bounded number of passes (no diameter budget).
-
-    ``transitive=False`` restores the cheaper pair-loser rule (drop every
-    doc appearing as the larger id of a pair) — exact only when clusters
-    are cliques; incompatible with ``score_col`` (the pair-loser rule is
-    orientation-fixed and cannot honor scores)."""
-    if score_col is not None and not transitive:
-        raise ValueError("score_col requires transitive=True")
-    if transitive:
-        comp = near_dup_components(
-            dup_pairs, max_iters=max_iters, algorithm=algorithm,
-            star_max_iters=star_max_iters,
-        )
-        ident = _q(id_col)
-        if score_col is None:
-            losers = comp.where("node != label").selectExpr(f"node AS {ident}")
-        else:
-            m = comp.join(df.selectExpr(f"{ident} AS node", f"{_q(score_col)} AS _s"), "node")
-            best = m.groupBy("label").agg(F.expr("max(_s) AS _best"))
-            winners = (
-                m.join(best, "label")
-                .where("_s <=> _best")
-                .groupBy("label")
-                .agg(F.expr("min(node) AS _winner"))
-            )
-            losers = m.join(winners, "label").where("node != _winner").selectExpr(f"node AS {ident}")
+    Components come from ``partition_components``: exact on any graph in
+    a bounded number of passes."""
+    comp = partition_components(dup_pairs)
+    ident = _q(id_col)
+    if score_col is None:
+        losers = comp.where("node != label").selectExpr(f"node AS {ident}")
     else:
-        losers = dup_pairs.selectExpr(f"b AS {_q(id_col)}").distinct()
+        m = comp.join(df.selectExpr(f"{ident} AS node", f"{_q(score_col)} AS _s"), "node")
+        best = m.groupBy("label").agg(F.expr("max(_s) AS _best"))
+        winners = (
+            m.join(best, "label")
+            .where("_s <=> _best")
+            .groupBy("label")
+            .agg(F.expr("min(node) AS _winner"))
+        )
+        losers = m.join(winners, "label").where("node != _winner").selectExpr(f"node AS {ident}")
     return df.join(losers, id_col, "left_anti")
 
 

@@ -3,15 +3,15 @@
 Baseline: brute-force cosine top-k (exact) — broadcast the query side,
 fold-dot scoring with per-row norms, window top-k. Scale paths:
 
-- ``lsh_topk``: random-hyperplane LSH — bucket both sides by sign bits of
-  seeded random projections, equi-join on (table, bucket), exact cosine
-  only within buckets. Recall/cost tuned by (n_tables, n_bits).
-- ``ivf_topk``: IVF-flat — k-means-lite centroids (seeded deterministic
-  sample, fixed Lloyd iterations), assign every vector to its nearest
-  centroid, probe ``n_probe`` nearest centroids per query. The coarse
-  quantizer is the analog of the reference's kd-tree candidate pruning
+- ``ivf_topk``: IVF-flat — k-means-lite centroids
+  (``train_centroids_from_file``: seeded deterministic sample, fixed Lloyd
+  iterations), assign every vector to its nearest centroid, probe
+  ``n_probe`` nearest centroids per query. The coarse quantizer is the
+  analog of the reference's kd-tree candidate pruning
   (``/root/reference/pyPPI/kdtree.py:8-48``): bound the candidate set,
   then apply the exact kernel.
+- ``ivf_pq_topk``: IVFADC — the same cells plus product-quantized
+  residual codes, asymmetric-distance shortlist, exact re-rank.
 
 Row-side vector math uses the higher-order fold (``functions/vectors.py``
 — MEASURED 3-6× faster than unrolled codegen on 64-dim doubles, whose
@@ -29,7 +29,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.vectors import cosine_similarity, dot, dot_literal, dot_sql, l2_norm
+from ..functions.vectors import dot, dot_literal, dot_sql, l2_norm
 
 
 def _as_double(col):
@@ -123,8 +123,8 @@ def pit_topk(
     and the causality comparison is a cheap predicate so it is safe
     inside the BroadcastNestedLoopJoin condition (the expensive cosine
     stays in a projection above it).  Scale escape: for large query sets
-    run ``ivf_topk``/``lsh_topk`` buckets first and apply the ts
-    predicate before the per-bucket top-k — note the recall interaction:
+    run ``ivf_topk`` cells first and apply the ts predicate before the
+    per-cell top-k — note the recall interaction:
     the top-k AMONG PAST rows may need a deeper ``n_probe`` when the
     unconstrained nearest neighbors are mostly future rows.
 
@@ -138,149 +138,9 @@ def pit_topk(
     )
 
 
-def _random_planes(dim: int, n_tables: int, n_bits: int, seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_tables, n_bits, dim))
-
-
-def _bucket_expr(vec, planes: np.ndarray):
-    """Sign-bit bucket id for one LSH table: packed bits of dot(vec, plane)>0.
-    Coefficients are literals → pure codegen multiply-adds."""
-    bucket = F.lit(0).cast("long")
-    for b in range(planes.shape[0]):
-        positive = dot_literal(vec, planes[b]) > 0
-        bucket = bucket.bitwiseOR(
-            F.when(positive, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-        )
-    return bucket
-
-
-def _banded(
-    df: DataFrame,
-    ident: str,
-    id_col: str,
-    vec_col: str,
-    planes: np.ndarray,
-    dim: int,
-    bucket_strategy: str = "blas",
-) -> DataFrame:
-    """One row per (vector, LSH table): ident, vector, its norm, (_tbl, _bkt).
-
-    ``blas`` (default): sign bits via one dense matmul per Arrow batch in
-    ``mapInPandas`` — V @ P.T then bit-pack, ~100× the per-row JVM
-    expression throughput (the vector crosses Arrow once and rides along).
-    ``jvm``: pure-JVM fold dots — no Python workers, for deployments that
-    forbid them. Either way the table fan-out (posexplode) happens JVM-side
-    so the Arrow transfer is one row per vector, not per (vector, table).
-    """
-    import pandas as pd
-
-    n_tables, n_bits = planes.shape[0], planes.shape[1]
-    v = _as_double(vec_col)
-    if bucket_strategy == "jvm":
-        staged = df.select(
-            F.col(id_col).alias(ident),
-            v.alias(f"_v_{ident}"),
-            l2_norm(v, dim).alias(f"_n_{ident}"),
-            *[_bucket_expr(v, planes[t]).alias(f"_b{t}") for t in range(n_tables)],
-        )
-    elif bucket_strategy == "blas":
-        P = planes.reshape(-1, planes.shape[-1]).T  # (D, T*B)
-        weights = (1 << np.arange(n_bits)).astype(np.int64)
-        id_type = df.select(F.col(id_col)).schema[0].dataType.simpleString()
-        schema = (
-            f"{ident} {id_type}, _v_{ident} array<double>, _n_{ident} double, "
-            + ", ".join(f"_b{t} long" for t in range(n_tables))
-        )
-
-        def kernel(batches):
-            for b in batches:
-                if not len(b):
-                    continue
-                V = np.stack(b["_v"].to_numpy())
-                bits = (V @ P) > 0
-                buckets = bits.reshape(len(b), n_tables, n_bits) @ weights
-                out = {
-                    ident: b["_id"].to_numpy(),
-                    f"_v_{ident}": b["_v"].to_numpy(),
-                    f"_n_{ident}": np.linalg.norm(V, axis=1),
-                }
-                for t in range(n_tables):
-                    out[f"_b{t}"] = buckets[:, t]
-                yield pd.DataFrame(out)
-
-        staged = df.select(F.col(id_col).alias("_id"), v.alias("_v")).mapInPandas(
-            kernel, schema=schema
-        )
-    else:
-        raise ValueError(f"unknown bucket_strategy {bucket_strategy!r}")
-    return staged.select(
-        ident,
-        f"_v_{ident}",
-        f"_n_{ident}",
-        F.posexplode(F.array(*[F.col(f"_b{t}") for t in range(n_tables)])).alias("_tbl", "_bkt"),
-    )
-
-
-def lsh_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_tables: int = 8,
-    n_bits: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-    bucket_strategy: str = "blas",
-) -> DataFrame:
-    """Approximate top-k: exact cosine within random-hyperplane buckets.
-
-    ``dim`` is REQUIRED (no silent default): planes built for the wrong
-    width make the jvm strategy degenerate silently (null-padded dots put
-    every vector in bucket 0 → an O(n²) cross join per table).
-
-    Join key is (table_idx, bucket) — a pure equi-join, shuffled-hash/SMJ,
-    AQE-skew-splittable. A (query, candidate) pair can collide in several
-    tables → dedup before scoring.
-    """
-    if dim is None:
-        raise ValueError("pass the embedding dim explicitly (e.g. dim=64)")
-    planes = _random_planes(dim, n_tables, n_bits, seed)
-
-    qb = _banded(queries, query_id_col, id_col, vec_col, planes, dim, bucket_strategy)
-    cb = _banded(candidates, "neighbor_id", id_col, vec_col, planes, dim, bucket_strategy)
-    cand_pairs = (
-        qb.join(cb, ["_tbl", "_bkt"], "inner")
-        .where(F.col("neighbor_id") != F.col(query_id_col))
-        .select(
-            query_id_col, "neighbor_id",
-            f"_v_{query_id_col}", "_v_neighbor_id",
-            f"_n_{query_id_col}", "_n_neighbor_id",
-        )
-        .dropDuplicates([query_id_col, "neighbor_id"])
-    )
-    scored = cand_pairs.select(
-        query_id_col,
-        "neighbor_id",
-        _cos(
-            F.col(f"_v_{query_id_col}"), F.col("_v_neighbor_id"),
-            F.col(f"_n_{query_id_col}"), F.col("_n_neighbor_id"), dim,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(query_id_col, "neighbor_id", "rk", "cos_sim")
-    )
-
-
 def _kmeans(sample: np.ndarray, n_centroids: int, iters: int, seed: int) -> np.ndarray:
     """Seeded Lloyd iterations over a bounded in-memory sample (cosine
-    assignment, mean update) — shared by the Spark-sampled and file-based
-    trainers so both produce identical centroids from identical samples."""
+    assignment, mean update) — the IVF and IVFADC trainers share it."""
     rng = np.random.default_rng(seed)
     cent = sample[rng.choice(len(sample), n_centroids, replace=False)]
     for _ in range(iters):
@@ -292,27 +152,6 @@ def _kmeans(sample: np.ndarray, n_centroids: int, iters: int, seed: int) -> np.n
             if len(members):
                 cent[c] = members.mean(axis=0)
     return cent
-
-
-def _bounded_sample(
-    candidates: DataFrame,
-    vec_col: str,
-    id_col: str,
-    sample_rows: int,
-    seed: int,
-) -> np.ndarray:
-    """The trainers' deterministic bounded sample (shared by
-    train_centroids / train_pq / train_ivf_pq so the selection convention
-    cannot drift): rows whose seeded id-hash falls in the smallest
-    buckets, pre-filtered to ~4x the target from a cheap count, ordered
-    by the hash and truncated — unbiased w.r.t. physical layout,
-    identical across parallelism levels, O(sample) driver memory."""
-    side = candidates.select(_as_double(vec_col).alias("v"), F.col(id_col).alias("_id"))
-    n = side.count()
-    h = F.pmod(F.xxhash64(F.col("_id"), F.lit(seed)), F.lit(1_000_000))
-    if n > 4 * sample_rows:
-        side = side.where(h < int(4 * sample_rows / n * 1_000_000) + 1)
-    return np.array(side.orderBy(h, "_id").limit(sample_rows).toPandas()["v"].tolist())
 
 
 def _subspace_kmeans(X: np.ndarray, n_codes: int, iters: int, rng) -> np.ndarray:
@@ -339,17 +178,16 @@ def _file_sample(
 ) -> np.ndarray:
     """Deterministic bounded sample of a parquet file WITHOUT a Spark
     session (pyarrow + numpy) — the selection convention for every
-    ``*_from_file`` trainer, used where a quantizer must be reproducible
-    outside the engine (e.g. to pin literals into a SQL oracle).
-    Sampling: rows ordered by md5 of the id, first N.
+    trainer, so a quantizer is reproducible outside the engine (e.g. to
+    pin literals into a SQL oracle) and identical across parallelism
+    levels. Sampling: rows ordered by md5 of the id, first N.
 
     The selection is a BOUNDED single pass: record batches stream through a
     size-``sample_rows`` max-heap keyed on (md5(seed|id), file_row_index) —
     O(sample_rows) memory regardless of table size (a full ``to_pandas()``
-    here would be an unbounded driver materialization, the exact hazard the
-    Spark-side trainer avoids). The tie-break on the file row index makes
-    the result identical to a stable sort of the whole table by the md5 key
-    truncated to ``sample_rows``."""
+    here would be an unbounded driver materialization). The tie-break on
+    the file row index makes the result identical to a stable sort of the
+    whole table by the md5 key truncated to ``sample_rows``."""
     import hashlib
     import heapq
     import pyarrow.parquet as pq
@@ -387,39 +225,11 @@ def train_centroids_from_file(
     seed: int = 42,
 ) -> np.ndarray:
     """Train the IVF coarse quantizer as a PURE FUNCTION of a parquet file
-    (no Spark session; ``_file_sample`` selection → ``_kmeans``)."""
+    (no Spark session; ``_file_sample`` selection → ``_kmeans``). The
+    sample is bounded at any corpus size — a deliberately driver-cheap
+    trainer, not MLlib."""
     V = _file_sample(path, vec_col, id_col, sample_rows, seed)
     return _kmeans(V, n_centroids, iters, seed)
-
-
-def train_centroids(
-    candidates: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 10_000,
-    iters: int = 5,
-    seed: int = 42,
-) -> np.ndarray:
-    """Driver-side seeded k-means over a bounded sample (IVF coarse
-    quantizer). At 100 TB the sample is still bounded — this is a
-    deliberately driver-cheap trainer, not MLlib.
-
-    The sample is a *deterministic pseudo-random* subset: rows whose seeded
-    id-hash falls in the smallest buckets, sized from a cheap count()
-    (parquet metadata), then ordered by that hash and truncated. Unlike
-    ``limit()`` (first-partitions-only → biased, layout-dependent), this is
-    unbiased w.r.t. physical layout and identical across parallelism
-    levels; the hash pre-filter keeps the TakeOrdered network cost at
-    O(sample) instead of O(partitions × sample).
-    """
-    sample = _bounded_sample(candidates, vec_col, id_col, sample_rows, seed)
-    if len(sample) < n_centroids:
-        raise ValueError(
-            f"training sample has {len(sample)} rows < n_centroids="
-            f"{n_centroids}; lower n_centroids or raise sample_rows"
-        )
-    return _kmeans(sample, n_centroids, iters, seed)
 
 
 def _nearest_centroids_expr(vec, centroids: np.ndarray, n: int, vnorm=None):
@@ -493,58 +303,33 @@ def _assign_cells_blas(
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
+    centroids: np.ndarray,
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    centroids: np.ndarray | None = None,
-    assign_strategy: str = "expr",
 ) -> DataFrame:
     """IVF-flat: candidates assigned to their nearest centroid cell; each
     query probes its ``n_probe`` nearest cells; exact cosine within cells.
-
-    ``assign_strategy``: ``expr`` (JVM fold dots per centroid — no Python
-    workers, the oracle-stable default, right up to a few dozen centroids)
-    or ``blas`` (one matmul per Arrow batch — the scale path when the
-    quantizer has hundreds/thousands of cells; same tie order, but BLAS
-    reduction order can flip an assignment whose two best cells are within
-    1 ULP — irrelevant to an ANN contract). Final scoring is the exact JVM
-    fold in both modes."""
-    if centroids is None:
-        centroids = train_centroids(candidates, n_centroids, vec_col, id_col=id_col, seed=seed)
-    if assign_strategy not in ("expr", "blas"):
-        raise ValueError(f"unknown assign_strategy {assign_strategy!r}")
+    Train ``centroids`` with ``train_centroids_from_file``. Assignment is
+    JVM fold dots per centroid (no Python workers; the oracle replays it
+    value-for-value), and final scoring is the exact JVM fold."""
     dim = centroids.shape[1]
 
     cv = _as_double(vec_col)
-    if assign_strategy == "blas":
-        # norms for SCORING are recomputed as the JVM fold (not the numpy
-        # norm the kernel used for assignment): scores must be bitwise
-        # identical across assignment strategies and to the oracle
-        c_assigned = _assign_cells_blas(candidates, "neighbor_id", id_col, vec_col, centroids, 1).select(
-            "neighbor_id", F.col("_v").alias("_vc"), l2_norm(F.col("_v"), dim).alias("_cn"),
-            F.element_at("_cells", 1).alias("_cell"),
-        )
-        q_assigned = _assign_cells_blas(queries, query_id_col, id_col, vec_col, centroids, n_probe).select(
-            query_id_col, F.col("_v").alias("_vq"), l2_norm(F.col("_v"), dim).alias("_qn"),
-            F.explode("_cells").alias("_cell"),
-        )
-    else:
-        c_assigned = candidates.select(
-            F.col(id_col).alias("neighbor_id"), cv.alias("_vc"), l2_norm(cv, dim).alias("_cn")
-        ).select(
-            "neighbor_id", "_vc", "_cn",
-            F.element_at(_nearest_centroids_expr(F.col("_vc"), centroids, 1, F.col("_cn")), 1).alias("_cell"),
-        )
-        q_assigned = queries.select(
-            F.col(id_col).alias(query_id_col), cv.alias("_vq"), l2_norm(cv, dim).alias("_qn")
-        ).select(
-            query_id_col, "_vq", "_qn",
-            F.explode(_nearest_centroids_expr(F.col("_vq"), centroids, n_probe, F.col("_qn"))).alias("_cell"),
-        )
+    c_assigned = candidates.select(
+        F.col(id_col).alias("neighbor_id"), cv.alias("_vc"), l2_norm(cv, dim).alias("_cn")
+    ).select(
+        "neighbor_id", "_vc", "_cn",
+        F.element_at(_nearest_centroids_expr(F.col("_vc"), centroids, 1, F.col("_cn")), 1).alias("_cell"),
+    )
+    q_assigned = queries.select(
+        F.col(id_col).alias(query_id_col), cv.alias("_vq"), l2_norm(cv, dim).alias("_qn")
+    ).select(
+        query_id_col, "_vq", "_qn",
+        F.explode(_nearest_centroids_expr(F.col("_vq"), centroids, n_probe, F.col("_qn"))).alias("_cell"),
+    )
     pairs = q_assigned.join(c_assigned, "_cell").where(
         F.col("neighbor_id") != F.col(query_id_col)
     )
@@ -609,7 +394,8 @@ def threshold_pairs_exact(
     default must never depend on the caller knowing N. Pass an explicit
     ``n_blocks`` to override (e.g. to force single-block for tiny inputs
     without paying the count). For sets where even O(n²) *scoring* is too
-    much, switch to ``embedding_neardup_pairs`` (LSH).
+    much, switch to ``semantic_dedup_pairs`` (pairs only within k-means
+    cells).
     """
     import math
 
@@ -691,45 +477,6 @@ def threshold_pairs_exact(
     )
 
 
-def embedding_neardup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tables: int = 8,
-    n_bits: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-    bucket_strategy: str = "blas",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a < b) above ``threshold``:
-    LSH-bucketed candidate generation + exact cosine verification.
-    ``dim`` is required — see lsh_topk. Note the two bucket strategies can
-    disagree on pairs within 1 ULP of ``threshold`` (numpy vs JVM-fold
-    norm summation order); the candidate-generation stage is approximate
-    by construction either way."""
-    if dim is None:
-        raise ValueError("pass the embedding dim explicitly (e.g. dim=64)")
-    planes = _random_planes(dim, n_tables, n_bits, seed)
-    banded = _banded(df, "x", id_col, vec_col, planes, dim, bucket_strategy)
-    a = banded.select(
-        F.col("x").alias("a"), F.col("_v_x").alias("_va"), F.col("_n_x").alias("_na"),
-        "_tbl", "_bkt",
-    )
-    b = banded.select(
-        F.col("x").alias("b"), F.col("_v_x").alias("_vb"), F.col("_n_x").alias("_nb"),
-        "_tbl", "_bkt",
-    )
-    return (
-        a.join(b, ["_tbl", "_bkt"])
-        .where(F.col("a") < F.col("b"))
-        .dropDuplicates(["a", "b"])
-        .withColumn("cos_sim", _cos(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"), dim))
-        .where(F.col("cos_sim") >= threshold)
-        .select("a", "b", F.round("cos_sim", 6).alias("cos_sim"))
-    )
-
-
 def semantic_dedup_pairs(
     df: DataFrame,
     centroids: np.ndarray,
@@ -745,10 +492,10 @@ def semantic_dedup_pairs(
     arXiv:2303.09540): assign every vector to its nearest k-means
     centroid by cosine, then compare pairs ONLY within a cluster —
     (a, b, cos_sim, cell) for within-cluster cosine >= ``threshold``,
-    a < b. Unlike ``embedding_neardup_pairs`` (random-hyperplane LSH,
-    probabilistic recall) the cluster structure is DATA-adapted: semantic
-    duplicates concentrate in the same cell, and the miss mode is
-    documented (a pair straddling a cell boundary), not random.
+    a < b. Unlike random-hyperplane LSH (probabilistic recall) the
+    cluster structure is DATA-adapted: semantic duplicates concentrate in
+    the same cell, and the miss mode is documented (a pair straddling a
+    cell boundary), not random.
 
     100 TB shape: pairwise work is Σ|cell|² instead of N² — with
     k ≈ N / target_cell_size the scoring stays linear-ish in N.
@@ -767,9 +514,8 @@ def semantic_dedup_pairs(
     the pure-JVM cell self-join (no Python workers); both use the
     identical assignment tie order (descending sim, then descending
     centroid id), so results are strategy-independent. Train centroids
-    with ``train_centroids`` (Spark sample) or
-    ``train_centroids_from_file`` (oracle-pinnable pure function of the
-    parquet)."""
+    with ``train_centroids_from_file`` (oracle-pinnable pure function of
+    the parquet)."""
     import math
 
     import pandas as pd
@@ -914,105 +660,7 @@ def semantic_dedup_pairs(
     )
 
 
-def semantic_dedup(
-    df: DataFrame,
-    centroids: np.ndarray,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    assign_strategy: str = "blas",
-) -> DataFrame:
-    """SemDeDup end-to-end: within-cluster cosine pairs above
-    ``threshold`` → transitive connected-component survivors (min id per
-    component, the same representative rule as every other dedup family
-    in this engine — deterministic, unlike the paper's random keeper).
-    Returns the surviving rows of ``df`` (all columns)."""
-    from .dedup import near_dedup_representatives
-
-    pairs = semantic_dedup_pairs(
-        df, centroids, threshold=threshold, id_col=id_col, vec_col=vec_col,
-        dim=dim, assign_strategy=assign_strategy,
-    )
-    return near_dedup_representatives(df, pairs.select("a", "b"), id_col=id_col)
-
-
 # ------------------------------------------------------------------ PQ
-
-def train_pq(
-    candidates: DataFrame,
-    m: int = 16,
-    n_codes: int = 32,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 10_000,
-    iters: int = 8,
-    seed: int = 42,
-) -> np.ndarray:
-    """Train product-quantization codebooks (Jégou et al., "Product
-    quantization for nearest neighbor search"): split the (L2-normalized)
-    vector into ``m`` contiguous subvectors and run seeded k-means with
-    ``n_codes`` centroids in each subspace → codebooks of shape
-    (m, n_codes, dim/m). A PQ code stores a vector in m·log2(n_codes)
-    bits — at the defaults 80 bits vs 64×8 bytes, the ~50× compression
-    that lets a billion-vector index live in executor memory (the reason
-    IVF-*flat* stops scaling: it re-reads full vectors per probe).
-
-    Sampling and the per-subspace Lloyd loop reuse the IVF trainer's
-    machinery (bounded deterministic sample, driver-side numpy — see
-    ``train_centroids`` for why not MLlib). Vectors are L2-normalized
-    BEFORE splitting so the asymmetric-distance dot approximates cosine.
-    """
-    sample = _bounded_sample(candidates, vec_col, id_col, sample_rows, seed)
-    dim = sample.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sample = sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    sub = dim // m
-    rng = np.random.default_rng(seed)
-    books = np.empty((m, n_codes, sub), dtype=np.float64)
-    for j in range(m):
-        books[j] = _subspace_kmeans(sample[:, j * sub:(j + 1) * sub], n_codes, iters, rng)
-    return books
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>): each vector L2-normalized, split into
-    subvectors, each assigned its nearest codebook centroid (squared L2)
-    — one BLAS pass per Arrow batch per subspace, broadcast codebooks,
-    ZERO shuffle (encoding is row-local; the plan is scan → mapInPandas).
-    The encoded table is what a 100 TB corpus materializes once and
-    serves many query batches from."""
-    import pandas as pd
-
-    B = codebooks.astype(np.float64)
-    m, n_codes, sub = B.shape
-    id_type = df.schema[id_col].dataType.simpleString()
-    bc = df.sparkSession.sparkContext.broadcast(B)
-
-    def kernel(batches):
-        books = bc.value
-        for b in batches:
-            if not len(b):
-                continue
-            V = np.stack(b["_v"].to_numpy()).astype(np.float64)
-            V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(V), m), dtype=np.int32)
-            for j in range(m):
-                S = V[:, j * sub:(j + 1) * sub]
-                C = books[j]
-                d2 = (S * S).sum(1)[:, None] - 2.0 * (S @ C.T) + (C * C).sum(1)[None, :]
-                codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame({id_col: b["_id"].to_numpy(), "codes": list(codes)})
-
-    staged = df.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v"))
-    return staged.mapInPandas(kernel, schema=f"{id_col} {id_type}, codes array<int>")
-
 
 def _exact_rerank(
     shortlist: DataFrame,
@@ -1026,8 +674,7 @@ def _exact_rerank(
     query_id_col: str,
     id_type: str,
 ) -> DataFrame:
-    """Shared second stage of the PQ searchers: re-score the ADC
-    shortlist with exact JVM-fold cosine against the original vectors and
+    """Second stage of ``ivf_pq_topk``: re-score the ADC shortlist with exact JVM-fold cosine against the original vectors and
     take the exact top-k. One inner join against the vector table (only
     shortlist rows are read back) + a broadcast of the tiny query set."""
     cv = _as_double(vec_col)
@@ -1054,99 +701,8 @@ def _exact_rerank(
     )
 
 
-def pq_topk(
-    queries: DataFrame,
-    codes_df: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    rerank: DataFrame | None = None,
-    rerank_factor: int = 4,
-    dim: int | None = None,
-    max_queries: int = 10_000,
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: for each query build the
-    m × n_codes lookup table LUT[j][c] = q_j · codebook[j][c] (driver-side,
-    tiny), broadcast all LUTs, and score every encoded candidate with m
-    table lookups + adds per vector — no decode, no full-vector reads.
-    Per-partition top-k' in the kernel bounds the output at
-    (queries × k' × partitions) rows before the exact global window.
-
-    ``rerank``: pass the ORIGINAL vector table to re-score the top
-    ``rerank_factor × k`` ADC candidates with exact JVM-fold cosine — the
-    standard two-stage serving shape (ADC recall@4k is near-1, exact
-    re-rank restores exact ordering). Output matches ``brute_force_topk``
-    columns; ``cos_sim`` is the ADC approximation when ``rerank`` is None.
-
-    The query set is collected to the driver (LUT construction) and
-    guarded by ``max_queries`` — ANN serving batches are bounded; for an
-    unbounded query table use ``ivf_topk``/``lsh_topk``.
-    """
-    import pandas as pd
-
-    B = codebooks.astype(np.float64)
-    m, n_codes, sub = B.shape
-    qrows = queries.select(
-        F.col(id_col).alias("_qid"), _as_double(vec_col).alias("_v")
-    ).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_topk: > max_queries={max_queries} query rows; PQ serving "
-            "expects bounded query batches — use ivf_topk/lsh_topk for "
-            "query tables"
-        )
-    qids = [r["_qid"] for r in qrows]
-    Q = np.array([r["_v"] for r in qrows], dtype=np.float64)
-    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    # LUT[q, j, c] = q_sub_j . B[j, c]
-    lut = np.einsum("qjs,jcs->qjc", Q.reshape(len(Q), m, sub), B)
-    bc = codes_df.sparkSession.sparkContext.broadcast((qids, lut))
-    kk = max(k, rerank_factor * k if rerank is not None else k)
-    id_type = codes_df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches):
-        qids_b, lut_b = bc.value
-        nq = len(qids_b)
-        for b in batches:
-            if not len(b):
-                continue
-            codes = np.stack(b["codes"].to_numpy()).astype(np.int64)  # N x m
-            ids = b[id_col].to_numpy()
-            # scores: for each query, sum_j LUT[q, j, codes[:, j]] -> N
-            out_q, out_id, out_s = [], [], []
-            for qi in range(nq):
-                s = lut_b[qi][np.arange(m)[None, :], codes].sum(axis=1)  # N
-                mask = ids != qids_b[qi]
-                sm, idm = s[mask], ids[mask]
-                # (score desc, id asc) total order: batch cut independent
-                # of physical row order (determinism invariant)
-                top = np.lexsort((idm, -sm))[:kk]
-                out_q.extend([qids_b[qi]] * len(top))
-                out_id.extend(idm[top])
-                out_s.extend(sm[top])
-            yield pd.DataFrame({query_id_col: out_q, "neighbor_id": out_id, "_adc": out_s})
-
-    cand = codes_df.mapInPandas(
-        kernel, schema=f"{query_id_col} {id_type}, neighbor_id {id_type}, _adc double"
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("_adc").desc(), "neighbor_id")
-    shortlist = cand.withColumn("_rk", F.row_number().over(w)).where(F.col("_rk") <= kk)
-    if rerank is None:
-        return shortlist.select(
-            query_id_col, "neighbor_id", F.col("_rk").alias("rk"),
-            F.round("_adc", 6).alias("cos_sim"),
-        ).where(F.col("rk") <= k)
-    d = dim or codebooks.shape[0] * codebooks.shape[2]
-    Qraw = np.array([r["_v"] for r in qrows], dtype=np.float64)
-    return _exact_rerank(
-        shortlist, rerank, qids, Qraw, d, k, id_col, vec_col, query_id_col, id_type
-    )
-
-
-def train_ivf_pq(
-    candidates: DataFrame,
+def train_ivf_pq_from_file(
+    path: str,
     n_centroids: int = 16,
     m: int = 16,
     n_codes: int = 32,
@@ -1156,31 +712,27 @@ def train_ivf_pq(
     iters: int = 8,
     seed: int = 42,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Train the IVFADC index of Jégou et al.: a coarse quantizer
-    (``n_centroids`` cells over L2-normalized vectors) plus PQ codebooks
-    trained on the RESIDUALS v − centroid(v). Residual PQ is what makes
-    IVF-PQ beat flat PQ: residual magnitudes are a fraction of vector
-    magnitudes, so the same code budget quantizes far finer. Returns
-    (centroids (n_centroids, dim), codebooks (m, n_codes, dim/m)) — both
-    pure functions of (data sample, seed)."""
-    sample = _bounded_sample(candidates, vec_col, id_col, sample_rows, seed)
-    return _train_ivf_pq_core(sample, n_centroids, m, n_codes, iters, seed)
-
-
-def _train_ivf_pq_core(
-    sample: np.ndarray, n_centroids: int, m: int, n_codes: int, iters: int, seed: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Shared IVFADC training body (Spark-sampled and file-pinned trainers
-    feed it the same-shape float64 sample so the math cannot drift)."""
-    dim = sample.shape[1]
+    """Train the IVFADC index of Jégou et al. ("Product quantization for
+    nearest neighbor search") as a PURE FUNCTION of a parquet file (no
+    Spark session; ``_file_sample`` selection, as
+    ``train_centroids_from_file``): a coarse quantizer (``n_centroids``
+    cells over L2-normalized vectors) plus PQ codebooks trained on the
+    RESIDUALS v − centroid(v). A code stores a vector in
+    m·log2(n_codes) bits; residual magnitudes are a fraction of vector
+    magnitudes, so the same code budget quantizes far finer than flat PQ.
+    Returns (centroids (n_centroids, dim), codebooks (m, n_codes,
+    dim/m)), which a SQL oracle can inline as the exact literals the
+    engine query uses."""
+    V = _file_sample(path, vec_col, id_col, sample_rows, seed)
+    dim = V.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
-    if len(sample) < max(n_centroids, n_codes):
+    if len(V) < max(n_centroids, n_codes):
         raise ValueError(
-            f"training sample has {len(sample)} rows < "
+            f"training sample has {len(V)} rows < "
             f"max(n_centroids, n_codes)={max(n_centroids, n_codes)}"
         )
-    S = sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
+    S = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
     cent = _kmeans(S.copy(), n_centroids, iters, seed)
     # residuals w.r.t. the EUCLIDEAN-nearest cell (the assignment pq
     # encode/search will use; cosine vs L2 agree on unit vectors for the
@@ -1193,26 +745,6 @@ def _train_ivf_pq_core(
     for j in range(m):
         books[j] = _subspace_kmeans(R[:, j * sub:(j + 1) * sub], n_codes, iters, rng)
     return cent, books
-
-
-def train_ivf_pq_from_file(
-    path: str,
-    n_centroids: int = 16,
-    m: int = 16,
-    n_codes: int = 32,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: int = 10_000,
-    iters: int = 8,
-    seed: int = 42,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Train the IVFADC index as a PURE FUNCTION of a parquet file (no
-    Spark session): ``_file_sample`` selection → the same training body as
-    ``train_ivf_pq``. Lets a SQL oracle inline the exact centroids and
-    codebooks the engine query uses (the ``train_centroids_from_file``
-    pattern extended to PQ)."""
-    V = _file_sample(path, vec_col, id_col, sample_rows, seed)
-    return _train_ivf_pq_core(V, n_centroids, m, n_codes, iters, seed)
 
 
 def ivf_pq_encode(
@@ -1279,8 +811,13 @@ def ivf_pq_topk(
     q·v. The per-(query, cell) LUT tensor is
     queries × n_probe × m × n_codes doubles (driver-tiny), broadcast
     once. Candidates outside probed cells cost ZERO work per query (and
-    at rest, with the index written cell-partitioned, zero I/O). Optional
-    exact re-rank identical to ``pq_topk``."""
+    at rest, with the index written cell-partitioned, zero I/O).
+
+    ``rerank``: pass the ORIGINAL vector table to re-score the top
+    ``rerank_factor × k`` ADC candidates with exact JVM-fold cosine (the
+    standard two-stage serving shape); ``cos_sim`` is the ADC
+    approximation when ``rerank`` is None. The query set is collected to
+    the driver for the LUTs, guarded by ``max_queries``."""
     import pandas as pd
 
     C = centroids.astype(np.float64)

@@ -11,7 +11,28 @@ from pyppi_spark.operators import (
     ngram_jaccard_pairs,
     simhash64,
 )
-from pyppi_spark.operators.dedup import near_dedup_representatives
+from pyppi_spark.operators.dedup import near_dedup_representatives, partition_components
+
+
+def _union_find_labels(edges) -> dict:
+    """Reference components: {node: smallest id in its component} for
+    every node of a non-self edge, by plain union-find."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _components(pairs, **kw) -> dict:
+    return {r.node: r.label for r in partition_components(pairs, **kw).collect()}
 
 
 def _docs(spark):
@@ -95,11 +116,9 @@ def test_transitive_chain_keeps_only_component_min(spark):
 
 
 def test_components_long_chain_converges(spark):
-    from pyppi_spark.operators.dedup import near_dup_components
-
-    # a 12-node path graph — worst-case diameter for the propagation loop
+    # a 12-node path graph — worst-case diameter for label propagation
     pairs = spark.createDataFrame([(i, i + 1) for i in range(11)], "a long, b long")
-    comp = {r.node: r.label for r in near_dup_components(pairs).collect()}
+    comp = _components(pairs)
     assert set(comp.values()) == {0} and len(comp) == 12
 
 
@@ -154,56 +173,47 @@ def test_winnow_guarantee_property(spark):
         assert by_doc[2 * i] & by_doc[2 * i + 1], f"pair {i} shares no fingerprint"
 
 
-def test_star_components_100_node_chain(spark):
-    """Large-star/small-star converges on a 100-node path graph in O(log n)
-    rounds — the adversarial shape where min-label propagation needs 100."""
-    from pyppi_spark.operators.dedup import star_components
-
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(99)], "a long, b long")
-    comp = {r.node: r.label for r in star_components(pairs, max_iters=20).collect()}
+def test_partition_components_100_node_chain(spark):
+    """A 100-node path graph (the shape where min-label propagation needs
+    100 rounds) is one component labelled 0, as union-find says."""
+    edges = [(i, i + 1) for i in range(99)]
+    comp = _components(spark.createDataFrame(edges, "a long, b long"))
+    assert comp == _union_find_labels(edges)
     assert set(comp.values()) == {0} and len(comp) == 100
 
 
-def test_star_equals_label_propagation(spark):
-    """Both component algorithms produce identical (node, label) sets on a
-    mixed graph: two chains, a clique, a singleton edge, string ids."""
-    from pyppi_spark.operators.dedup import near_dup_components, star_components
-
+def test_partition_components_equal_union_find_mixed_ids(spark):
+    """Identical (node, label) sets to union-find on a mixed graph: a
+    chain, a clique, a singleton edge, string ids."""
     edges = (
         [(f"d{i:02d}", f"d{i + 1:02d}") for i in range(5)]          # chain
         + [(f"x{a}", f"x{b}") for a in "abc" for b in "bcd" if a < b]  # clique-ish
         + [("solo1", "solo2")]
     )
-    pairs = spark.createDataFrame(edges, "a string, b string")
-    by_label = {(r.node, r.label) for r in near_dup_components(pairs, algorithm="label").collect()}
-    by_star = {(r.node, r.label) for r in star_components(pairs).collect()}
-    assert by_label == by_star
+    comp = _components(spark.createDataFrame(edges, "a string, b string"))
+    assert comp == _union_find_labels(edges)
 
 
-def test_auto_falls_back_to_star_on_deep_chain(spark):
-    """algorithm='auto' with a tiny label budget must converge via the star
-    fallback instead of raising (the round-2 behavior)."""
-    import pytest
-    from pyppi_spark.operators.dedup import near_dup_components
-
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(40)], "a long, b long")
-    comp = {r.node: r.label for r in near_dup_components(pairs, max_iters=3).collect()}
+def test_partition_components_coarsening_pass(spark):
+    """A contracted graph larger than ``single_partition_max_edges`` is
+    coarsened by another distributed pass before the single-partition
+    solve: the 41-node chain, its edges spread over 4 partitions so that
+    the first pass leaves cross-partition links, still labels exactly."""
+    edges = [(i, i + 1) for i in range(40)]
+    pairs = spark.createDataFrame(edges, "a long, b long").repartition(4)
+    comp = _components(pairs, single_partition_max_edges=1)
+    assert comp == _union_find_labels(edges)
     assert set(comp.values()) == {0} and len(comp) == 41
-    # explicit algorithm='label' keeps the loud failure contract
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        near_dup_components(pairs, max_iters=3, algorithm="label")
 
 
 def test_representatives_passthrough_deep_chain(spark):
-    """The public near_dedup_representatives API survives a chain deeper
-    than max_iters (the ADVICE gap: no knob, hard RuntimeError)."""
+    """The public near_dedup_representatives API keeps one survivor for a
+    40-edge chain (no diameter budget, no RuntimeError)."""
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(50)], "doc_id long, text string"
     )
     pairs = spark.createDataFrame([(i, i + 1) for i in range(40)], "a long, b long")
-    kept = sorted(
-        r.doc_id for r in near_dedup_representatives(docs, pairs, max_iters=3).collect()
-    )
+    kept = sorted(r.doc_id for r in near_dedup_representatives(docs, pairs).collect())
     assert kept == [0] + list(range(41, 50))
 
 
@@ -255,14 +265,10 @@ def test_winnow_kernel_fast_guarantee_and_no_shuffle(spark):
     assert s0 & s1
 
 
-def test_star_equals_label_on_random_graphs(spark):
-    """Property-style check over seeded random graphs: star contraction
-    and label propagation must produce identical component labelings
+def test_partition_components_equal_union_find_on_random_graphs(spark):
+    """Property-style check over seeded random graphs: partition
+    contraction and union-find produce identical component labelings
     (chains, forests, cliques, and singletons arise naturally)."""
-    import numpy as np
-
-    from pyppi_spark.operators.dedup import near_dup_components, star_components
-
     for seed in (3, 17, 99):
         rng = np.random.default_rng(seed)
         n_edges = int(rng.integers(5, 40))
@@ -272,9 +278,9 @@ def test_star_equals_label_on_random_graphs(spark):
             if a != b:
                 edges.add((int(min(a, b)), int(max(a, b))))
         pairs = spark.createDataFrame(sorted(edges), "a long, b long")
-        by_label = {(r.node, r.label) for r in near_dup_components(pairs, algorithm="label", max_iters=40).collect()}
-        by_star = {(r.node, r.label) for r in star_components(pairs).collect()}
-        assert by_label == by_star, f"seed {seed}: component labelings diverge"
+        assert _components(pairs) == _union_find_labels(edges), (
+            f"seed {seed}: component labelings diverge"
+        )
 
 
 def test_lsh_hot_bucket_skip_and_error(spark):

@@ -27,30 +27,46 @@ def _run(args):
 
 
 @pytest.fixture(scope="module")
-def minhash_runs(spark, tmp_path_factory):
-    """The minhash scenario two tests share: a full run over shard0, then
-    a ``--history-keys`` increment of shard1 against its outputs."""
-    tmp = tmp_path_factory.mktemp("minhash_runs")
+def shards(spark, tmp_path_factory):
+    """shard0 (30 docs) and shard1 (40 docs), which overlaps shard0 (ids
+    20-29 duplicated content) and brings fresh docs."""
+    tmp = tmp_path_factory.mktemp("shards")
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
     old_shard = str(tmp / "shard0")
     new_shard = str(tmp / "shard1")
     docs.where("doc_id < 30").write.parquet(old_shard)
-    # the new shard overlaps the old one (ids 20-29 duplicated content)
-    # plus brings fresh docs
     docs.where("doc_id >= 20 and doc_id < 60").write.parquet(new_shard)
+    return SimpleNamespace(old=old_shard, new=new_shard)
 
+
+@pytest.fixture(scope="module")
+def minhash_runs(shards, tmp_path_factory):
+    """The minhash runs three tests share: a full run over shard0, then a
+    ``--history-keys`` increment of shard1 against its outputs."""
+    tmp = tmp_path_factory.mktemp("minhash_runs")
     out0 = str(tmp / "run0")
-    m0 = _run(["--documents", old_shard, "--output", out0, "--master", "local[4]"])
+    m0 = _run(["--documents", shards.old, "--output", out0, "--master", "local[4]"])
     out1 = str(tmp / "run1")
     m1 = _run([
-        "--documents", new_shard, "--output", out1, "--mode", "incremental",
+        "--documents", shards.new, "--output", out1, "--mode", "incremental",
         "--history-keys", f"{out0}/content_keys",
         "--old-documents", f"{out0}/documents_kept",
         "--master", "local[4]",
     ])
-    return SimpleNamespace(new_shard=new_shard, out0=out0, m0=m0, out1=out1, m1=m1)
+    return SimpleNamespace(out0=out0, m0=m0, out1=out1, m1=m1)
+
+
+@pytest.fixture(scope="module")
+def simhash_run(shards, tmp_path_factory):
+    """The full simhash run over shard0 that two tests share."""
+    out0 = str(tmp_path_factory.mktemp("simhash_run") / "run0")
+    m0 = _run([
+        "--documents", shards.old, "--output", out0,
+        "--strategy", "simhash", "--max-hamming", "6", "--master", "local[4]",
+    ])
+    return SimpleNamespace(out0=out0, m0=m0)
 
 
 def test_dedup_corpus_job_full_then_incremental(spark, minhash_runs):
@@ -71,32 +87,22 @@ def test_dedup_corpus_job_full_then_incremental(spark, minhash_runs):
     assert k1 >= k0 + m1["docs_kept"] - 1
 
 
-def test_dedup_corpus_job_simhash_strategy(spark, tmp_path):
+def test_dedup_corpus_job_simhash_strategy(spark, simhash_run):
     """The SimHash family through the production entrypoint: exact dups
     collapse, the Hamming-ball pairs feed representatives, metrics report
     the near stage ran with cap accounting present."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    shard = str(tmp_path / "shard")
-    docs.where("doc_id < 40").write.parquet(shard)
-    out = str(tmp_path / "out")
-    m = _run([
-        "--documents", shard, "--output", out,
-        "--strategy", "simhash", "--max-hamming", "6",
-        "--master", "local[4]",
-    ])
+    out, m = simhash_run.out0, simhash_run.m0
     assert m["strategy"] == "simhash" and m["near_stage_ran"] is True
-    assert 0 < m["docs_kept"] <= m["docs_in"] == 40
+    assert 0 < m["docs_kept"] <= m["docs_in"] == 30
     assert m["cap_accounting"] is not None
     assert spark.read.parquet(f"{out}/documents_kept").count() == m["docs_kept"]
 
 
-def test_dedup_corpus_job_incremental_prev_artifacts(spark, tmp_path, minhash_runs):
+def test_dedup_corpus_job_incremental_prev_artifacts(spark, tmp_path, shards, minhash_runs):
     """Increment consuming the previous run's persisted artifacts:
     results identical to the text-derived path, the band table grows to
     cover the union corpus, and band_params mismatches fail loudly."""
-    new_shard, out0, m0 = minhash_runs.new_shard, minhash_runs.out0, minhash_runs.m0
+    out0, m0 = minhash_runs.out0, minhash_runs.m0
     # full run persisted the incremental artifacts
     bands0 = spark.read.parquet(f"{out0}/minhash_bands")
     assert bands0.select("doc_id").distinct().count() == m0["docs_kept"]
@@ -105,7 +111,7 @@ def test_dedup_corpus_job_incremental_prev_artifacts(spark, tmp_path, minhash_ru
     # artifact path vs text path must agree exactly
     out_a = str(tmp_path / "run1a")
     m_a = _run([
-        "--documents", new_shard, "--output", out_a, "--mode", "incremental",
+        "--documents", shards.new, "--output", out_a, "--mode", "incremental",
         "--prev-artifacts", out0,
         "--old-documents", f"{out0}/documents_kept",
         "--master", "local[4]",
@@ -123,29 +129,17 @@ def test_dedup_corpus_job_incremental_prev_artifacts(spark, tmp_path, minhash_ru
     )
 
 
-def test_dedup_corpus_job_incremental_simhash_no_old_text(spark, tmp_path):
+def test_dedup_corpus_job_incremental_simhash_no_old_text(spark, tmp_path, shards, simhash_run):
     """Incremental simhash from persisted keys alone: --old-documents is
     not passed at all — the frozen corpus text is never read (the Hamming
     verify runs on the 8-byte keys)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    old_shard = str(tmp_path / "shard0")
-    new_shard = str(tmp_path / "shard1")
-    docs.where("doc_id < 30").write.parquet(old_shard)
-    docs.where("doc_id >= 20 and doc_id < 60").write.parquet(new_shard)
-
-    out0 = str(tmp_path / "run0")
-    m0 = _run([
-        "--documents", old_shard, "--output", out0,
-        "--strategy", "simhash", "--max-hamming", "6", "--master", "local[4]",
-    ])
+    out0, m0 = simhash_run.out0, simhash_run.m0
     keys0 = spark.read.parquet(f"{out0}/simhash_keys")
     assert keys0.count() == m0["docs_kept"]
 
     out1 = str(tmp_path / "run1")
     m1 = _run([
-        "--documents", new_shard, "--output", out1, "--mode", "incremental",
+        "--documents", shards.new, "--output", out1, "--mode", "incremental",
         "--strategy", "simhash", "--max-hamming", "6",
         "--prev-artifacts", out0,
         "--master", "local[4]",
@@ -158,21 +152,13 @@ def test_dedup_corpus_job_incremental_simhash_no_old_text(spark, tmp_path):
     assert keys1.count() == m0["docs_kept"] + m1["docs_kept"]
 
 
-def test_dedup_corpus_job_kill_resume_identical(spark, tmp_path):
+def test_dedup_corpus_job_kill_resume_identical(spark, tmp_path, shards, minhash_runs):
     """Stage-checkpointed execution: a run killed after the near-pairs
     stage, re-invoked with the same --run-id, resumes from the ledger and
     produces byte-identical survivors AND metrics (cap accounting read
-    back from the ledger) vs an uninterrupted run."""
-    import subprocess
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    shard = str(tmp_path / "shard")
-    docs.where("doc_id < 50").write.parquet(shard)
-
-    out_ok = str(tmp_path / "uninterrupted")
-    m_ok = _run(["--documents", shard, "--output", out_ok, "--master", "local[4]"])
+    back from the ledger) vs an uninterrupted run (the shared full run
+    over shard0)."""
+    shard, out_ok, m_ok = shards.old, minhash_runs.out0, minhash_runs.m0
 
     out_kr = str(tmp_path / "killed")
     bad = subprocess.run(
@@ -195,22 +181,14 @@ def test_dedup_corpus_job_kill_resume_identical(spark, tmp_path):
     assert ids_ok == ids_kr
 
 
-def test_dedup_corpus_job_incremental_moss_no_old_text(spark, tmp_path):
+def test_dedup_corpus_job_incremental_moss_no_old_text(spark, tmp_path, shards):
     """Incremental MOSS from persisted fingerprints alone: --old-documents
     is not passed at all — the frozen corpus text is never read (the
     overlap rule is counted on the persisted (id, fingerprint) rows), and
     the winnow_fps artifact grows to cover the union corpus."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    old_shard = str(tmp_path / "shard0")
-    new_shard = str(tmp_path / "shard1")
-    docs.where("doc_id < 30").write.parquet(old_shard)
-    docs.where("doc_id >= 20 and doc_id < 60").write.parquet(new_shard)
-
     out0 = str(tmp_path / "run0")
     m0 = _run([
-        "--documents", old_shard, "--output", out0,
+        "--documents", shards.old, "--output", out0,
         "--strategy", "moss", "--master", "local[4]",
     ])
     assert m0["strategy"] == "moss" and m0["near_stage_ran"] is True
@@ -220,7 +198,7 @@ def test_dedup_corpus_job_incremental_moss_no_old_text(spark, tmp_path):
 
     out1 = str(tmp_path / "run1")
     m1 = _run([
-        "--documents", new_shard, "--output", out1, "--mode", "incremental",
+        "--documents", shards.new, "--output", out1, "--mode", "incremental",
         "--strategy", "moss",
         "--prev-artifacts", out0,
         "--master", "local[4]",

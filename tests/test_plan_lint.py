@@ -74,6 +74,17 @@ def test_plan_invariants_all_queries(spark):
         assert r["spread_exchanges"] <= 1, f"{n} spread more than once: {r}"
 
 
+def test_only_the_doc_id_input_spread_is_reclassified():
+    """The documents scan spread is not a computed shuffle; a
+    ``repartition(n, cols)`` on any other key still is."""
+    from plan_lint import is_input_spread
+
+    doc_spread = "+- Exchange hashpartitioning(doc_id#12L, 8), REPARTITION_BY_NUM, [plan_id=40]"
+    conv_repart = "+- Exchange hashpartitioning(conv_id#3, 8), REPARTITION_BY_NUM, [plan_id=41]"
+    assert is_input_spread(doc_spread)
+    assert not is_input_spread(conv_repart)
+
+
 def test_pushdown_and_column_pruning(spark):
     """Filters reach the parquet scan (PushedFilters) and the scan reads
     only referenced columns (ReadSchema excludes unused ones) — the two

@@ -293,8 +293,6 @@ def test_representatives_all_null_component_keeps_min_id(spark):
         r.doc_id for r in near_dedup_representatives(docs, pairs, score_col="s").collect()
     )
     assert kept == [7, 9]
-    with pytest.raises(ValueError):
-        near_dedup_representatives(docs, pairs, score_col="s", transitive=False)
 
 
 def test_representatives_constant_scores_equal_default_rule(spark):

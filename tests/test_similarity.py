@@ -7,22 +7,37 @@ from pyspark.sql import functions as F
 
 from pyppi_spark.operators.similarity import (
     brute_force_topk,
-    embedding_neardup_pairs,
     ivf_topk,
-    lsh_topk,
+    train_centroids_from_file,
 )
 
 DIM = 16
 
 
 @pytest.fixture(scope="module")
-def vecs(spark):
+def vecs_path(tmp_path_factory):
+    """The seeded vectors as one parquet file, which the trainers read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     rng = np.random.default_rng(7)
     base = rng.standard_normal((40, DIM))
     # plant near-duplicates: vectors 30..34 are tiny perturbations of 0..4
     base[30:35] = base[0:5] + rng.standard_normal((5, DIM)) * 0.01
-    rows = [(int(i), [float(x) for x in base[i]]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    path = str(tmp_path_factory.mktemp("vecs") / "vecs.parquet")
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(40), pa.int32()),
+            "embedding": pa.array(base.astype(np.float32).tolist(), pa.list_(pa.float32())),
+        }),
+        path,
+    )
+    return path
+
+
+@pytest.fixture(scope="module")
+def vecs(spark, vecs_path):
+    df = spark.read.parquet(vecs_path)
     df.persist()
     df.count()
     return df
@@ -37,38 +52,11 @@ def test_brute_force_exact_topk(spark, vecs):
     assert top[0] == 30 and top[1] == 31 and top[2] == 32
 
 
-def test_lsh_recall_of_planted_duplicates(spark, vecs):
-    out = lsh_topk(
-        vecs.where(F.col("vec_id") < 3), vecs, k=5, n_tables=12, n_bits=6, dim=DIM
-    ).toPandas()
-    top = out[out.rk == 1].set_index("query_id")["neighbor_id"]
-    # near-identical vectors collide in some band with overwhelming probability
-    assert top[0] == 30 and top[1] == 31 and top[2] == 32
-
-
-def test_ivf_recall_of_planted_duplicates(spark, vecs):
-    out = ivf_topk(
-        vecs.where(F.col("vec_id") < 3), vecs, k=5, n_centroids=4, n_probe=2, seed=3
-    ).toPandas()
+def test_ivf_recall_of_planted_duplicates(spark, vecs, vecs_path):
+    cents = train_centroids_from_file(vecs_path, n_centroids=4, seed=3)
+    out = ivf_topk(vecs.where(F.col("vec_id") < 3), vecs, cents, k=5, n_probe=2).toPandas()
     top = out[out.rk == 1].set_index("query_id")["neighbor_id"]
     assert top[0] == 30 and top[1] == 31 and top[2] == 32
-
-
-def test_embedding_neardup_pairs(spark, vecs):
-    pairs = embedding_neardup_pairs(vecs, threshold=0.98, n_tables=12, n_bits=6, dim=DIM).toPandas()
-    got = {(a, b) for a, b in zip(pairs.a, pairs.b)}
-    assert {(0, 30), (1, 31), (2, 32), (3, 33), (4, 34)} <= got
-
-
-def test_lsh_is_subset_of_bruteforce_scores(spark, vecs):
-    """Approximate results must agree with exact cosine on the pairs they
-    return (same kernel, only candidate generation differs)."""
-    q = vecs.where(F.col("vec_id") < 2)
-    bf = brute_force_topk(q, vecs, k=39, dim=DIM).toPandas()
-    ls = lsh_topk(q, vecs, k=39, n_tables=8, n_bits=6, dim=DIM).toPandas()
-    bf_scores = {(r.query_id, r.neighbor_id): r.cos_sim for r in bf.itertuples()}
-    for r in ls.itertuples():
-        assert np.isclose(bf_scores[(r.query_id, r.neighbor_id)], r.cos_sim, rtol=1e-9)
 
 
 def test_threshold_pairs_exact_equals_brute_force(spark, vecs):
@@ -148,64 +136,6 @@ def test_threshold_pairs_blocked_empty(spark):
     assert out.count() == 0 and out.columns == ["a", "b", "cos_sim"]
 
 
-def test_ivf_blas_assignment_equals_expr(spark, vecs):
-    """The BLAS cell-assignment path (large-quantizer scale path) must
-    produce the same top-k output as the JVM expr path on the fixture
-    (assignment ULP ties are absent in real data; final scoring is the
-    exact fold in both modes)."""
-    from pyppi_spark.operators.similarity import ivf_topk, train_centroids
-
-    cents = train_centroids(vecs, n_centroids=8, seed=42)
-    q = vecs.where(F.col("vec_id") < 5)
-    a = ivf_topk(q, vecs, k=10, n_probe=3, centroids=cents, assign_strategy="expr").toPandas()
-    b = ivf_topk(q, vecs, k=10, n_probe=3, centroids=cents, assign_strategy="blas").toPandas()
-    key = lambda df: df.sort_values(["query_id", "rk"]).reset_index(drop=True)
-    a, b = key(a), key(b)
-    assert len(a) == len(b) > 0
-    assert (a.neighbor_id == b.neighbor_id).all()
-    assert (a.cos_sim == b.cos_sim).all()  # exact fold scoring in both
-
-
-def test_pq_topk_recall_and_rerank(spark):
-    """Product quantization: ADC top-k recovers most of the exact top-k
-    (recall@10 over 80-bit codes), and the exact-rerank two-stage form
-    matches brute force almost everywhere; encoding is a zero-shuffle
-    Arrow kernel; everything is seeded-deterministic."""
-    from pyppi_spark.operators.similarity import (
-        brute_force_topk,
-        pq_encode,
-        pq_topk,
-        train_pq,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 5)
-
-    books = train_pq(emb, m=16, n_codes=32, sample_rows=2000, seed=42)
-    assert books.shape == (16, 32, 4)
-    books2 = train_pq(emb, m=16, n_codes=32, sample_rows=2000, seed=42)
-    assert (books == books2).all()  # fully deterministic
-
-    codes = pq_encode(emb, books)
-    plan = codes._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # row-local encode: scan -> kernel
-
-    exact = brute_force_topk(queries, emb, k=10).toPandas()
-    adc = pq_topk(queries, codes, books, k=10).toPandas()
-    e = exact.groupby("query_id")["neighbor_id"].apply(set)
-    a = adc.groupby("query_id")["neighbor_id"].apply(set)
-    recall = np.mean([len(e[q] & a[q]) / 10 for q in e.index])
-    assert recall >= 0.5, f"ADC recall@10 too low: {recall}"
-
-    rr = pq_topk(queries, codes, books, k=10, rerank=emb, rerank_factor=4).toPandas()
-    r = rr.groupby("query_id")["neighbor_id"].apply(set)
-    recall_rr = np.mean([len(e[q] & r[q]) / 10 for q in e.index])
-    assert recall_rr >= recall and recall_rr >= 0.8, f"rerank recall: {recall_rr}"
-    # reranked scores are the EXACT cosine: where ids agree, values agree
-    merged = rr.merge(exact, on=["query_id", "neighbor_id"], suffixes=("_pq", "_ex"))
-    assert np.allclose(merged["cos_sim_pq"], merged["cos_sim_ex"], atol=1e-9)
-
-
 def test_ivf_pq_topk_recall_and_cell_pruning(spark):
     """IVFADC (IVF + residual-PQ): deterministic training, one
     zero-shuffle encode kernel emitting (cell, codes), probe-limited ADC
@@ -214,14 +144,15 @@ def test_ivf_pq_topk_recall_and_cell_pruning(spark):
         brute_force_topk,
         ivf_pq_encode,
         ivf_pq_topk,
-        train_ivf_pq,
+        train_ivf_pq_from_file,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    path = "/root/testdata/sf0.001/embeddings.parquet"
+    emb = spark.read.parquet(path)
     queries = emb.where(F.col("vec_id") < 5)
 
-    cent, books = train_ivf_pq(emb, n_centroids=16, m=16, n_codes=32, sample_rows=2000, seed=42)
-    cent2, books2 = train_ivf_pq(emb, n_centroids=16, m=16, n_codes=32, sample_rows=2000, seed=42)
+    cent, books = train_ivf_pq_from_file(path, n_centroids=16, m=16, n_codes=32, sample_rows=2000, seed=42)
+    cent2, books2 = train_ivf_pq_from_file(path, n_centroids=16, m=16, n_codes=32, sample_rows=2000, seed=42)
     assert (cent == cent2).all() and (books == books2).all()
 
     index = ivf_pq_encode(emb, cent, books)
@@ -275,18 +206,19 @@ def test_ivf_pq_index_partition_pruning(spark, tmp_path):
         ivf_pq_encode,
         ivf_pq_topk,
         read_ivf_pq_index,
-        train_ivf_pq,
+        train_ivf_pq_from_file,
         write_ivf_pq_index,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    path = "/root/testdata/sf0.001/embeddings.parquet"
+    emb = spark.read.parquet(path)
     queries = emb.where(F.col("vec_id") < 3)
-    cent, books = train_ivf_pq(emb, n_centroids=16, m=16, n_codes=32, sample_rows=2000, seed=42)
+    cent, books = train_ivf_pq_from_file(path, n_centroids=16, m=16, n_codes=32, sample_rows=2000, seed=42)
     index = ivf_pq_encode(emb, cent, books)
-    path = str(tmp_path / "ivfpq_index")
-    write_ivf_pq_index(index, path)
+    index_path = str(tmp_path / "ivfpq_index")
+    write_ivf_pq_index(index, index_path)
 
-    stored = read_ivf_pq_index(spark, path)
+    stored = read_ivf_pq_index(spark, index_path)
     out = ivf_pq_topk(queries, stored, cent, books, k=5, n_probe=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters", 1)[1][:200]
@@ -299,18 +231,15 @@ def test_ivf_pq_index_partition_pruning(spark, tmp_path):
     )
 
 
-def test_semantic_dedup_planted_and_strategies(spark, vecs):
+def test_semantic_dedup_planted_and_strategies(spark, vecs, vecs_path):
     """SemDeDup: planted near-identical vectors (30..34 ~ 0..4) land in
     the same k-means cell and pair above threshold; survivors keep the
     min id per component; blas and expr assignment agree exactly; the
     candidate join is an equi join on the cell id (no BNLJ)."""
-    from pyppi_spark.operators.similarity import (
-        semantic_dedup,
-        semantic_dedup_pairs,
-        train_centroids,
-    )
+    from pyppi_spark.operators.dedup import near_dedup_representatives
+    from pyppi_spark.operators.similarity import semantic_dedup_pairs
 
-    cents = train_centroids(vecs, n_centroids=4, sample_rows=40, seed=1)
+    cents = train_centroids_from_file(vecs_path, n_centroids=4, sample_rows=40, seed=1)
     p_blas = semantic_dedup_pairs(
         vecs, cents, threshold=0.99, dim=DIM, assign_strategy="blas"
     )
@@ -325,7 +254,7 @@ def test_semantic_dedup_planted_and_strategies(spark, vecs):
     planted = {(i, i + 30) for i in range(5)}
     got = {(a, b) for a, b, _, _ in rows_b}
     assert planted <= got
-    surv = semantic_dedup(vecs, cents, threshold=0.99, dim=DIM)
+    surv = near_dedup_representatives(vecs, p_blas.select("a", "b"), id_col="vec_id")
     ids = sorted(r.vec_id for r in surv.select("vec_id").collect())
     assert set(ids).isdisjoint({a + 30 for a, b in planted if (a, a + 30) in got})
     assert {0, 1, 2, 3, 4} <= set(ids)

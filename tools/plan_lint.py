@@ -50,6 +50,14 @@ COUNTERS = [
 ]
 
 
+def is_input_spread(line: str) -> bool:
+    """True for the one deliberate input spread, ``_documents``' hash
+    repartition of an under-split scan on doc_id (REPARTITION_BY_NUM).
+    Every other ``repartition(n, cols)`` stays a shuffle exchange, so a
+    stray one still breaks the Exchange-free invariant."""
+    return "Exchange hashpartitioning(doc_id" in line and "REPARTITION_BY_NUM" in line
+
+
 def audit(names: list[str] | None = None, spark=None) -> dict[str, dict[str, int]]:
     import __spark_entry__ as e
 
@@ -66,14 +74,7 @@ def audit(names: list[str] | None = None, spark=None) -> dict[str, dict[str, int
         try:
             plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
             row = {k: plan.count(pat) for k, pat in COUNTERS}
-            # a hash-partitioned REPARTITION_BY_NUM line is a deliberate
-            # spread, not a computed shuffle — reclassify
-            spread_hash = sum(
-                1
-                for ln in plan.splitlines()
-                if "Exchange hashpartitioning" in ln and "REPARTITION_BY_NUM" in ln
-            )
-            row["shuffle_exchanges"] -= spread_hash
+            row["shuffle_exchanges"] -= sum(map(is_input_spread, plan.splitlines()))
             row["err"] = 0
         except Exception:
             row = {k: -1 for k, _ in COUNTERS}
